@@ -25,9 +25,6 @@ import org.apache.spark.sql.SparkSession
   * box cannot).
   */
 object Bench {
-  /** Legacy un-stamped floor path (rounds 6–15). Read-only fallback for
-    * migration; never written again — see [[prevPathFor]]. */
-  private val LegacyPrevPath = "/root/repo/bench_prev.json"
   private val LastPath = "/root/repo/bench_last.json"
   /** SF-STAMPED floor path (r15 verdict #1): the r14 min-merge floor
     * (164.2 s of per-key wall+byte history) was destroyed when envelope
@@ -59,25 +56,6 @@ object Bench {
     s"/root/repo/BENCH_FULL_${sfName(sfDir)}.json"
   private val OfficialSfName = "sf0.1"
   private val AliasFullPath = "/root/repo/BENCH_FULL.json"
-
-  /** The calmness bar a new run is annotated against: the post-gate load
-    * of the last run that ITSELF satisfied run_calm, carried forward in
-    * the floor record as `calm_gate_load`. (r13 ADVICE: bench_prev.json
-    * is rewritten on every run, calm or not, so comparing against the
-    * PREVIOUS run's load_after_gate let one noisy run drift the +0.5 bar
-    * upward until only the 3.0 admission gate capped it — the annotation
-    * stopped meaning "calm relative to a calm baseline".) Legacy
-    * fallbacks (load_after_gate / load_start) cover floors written before
-    * calm_gate_load existed.
-    */
-  private def readPrevCalmGateLoad(path: String): Option[Double] =
-    try {
-      val txt = new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
-      ("\"calm_gate_load\":([0-9.eE+-]+)".r.findFirstMatchIn(txt)
-        orElse "\"load_after_gate\":([0-9.eE+-]+)".r.findFirstMatchIn(txt)
-        orElse "\"load_start\":([0-9.eE+-]+)".r.findFirstMatchIn(txt))
-        .map(_.group(1).toDouble)
-    } catch { case _: Throwable => None }
 
   /** The run-calmness predicate (r12 verdict #5), extracted so
     * BenchPromotionSpec can pin it. Originally the gate on replacing
@@ -137,51 +115,51 @@ object Bench {
   private[graft] def byteRegression(delta: Long, floor: Double): Boolean =
     delta > (1L << 20) && delta > 0.10 * math.max(floor, 1.0)
 
-  /** minimal parser for a "name":{"k":v,...} numeric map we wrote */
-  private def readMap(txt: String, name: String): Map[String, Double] =
-    ("\"" + name + """":\{([^}]*)\}""").r.findFirstMatchIn(txt)
-      .map(_.group(1).split(",").flatMap { kv =>
-        kv.split(":") match {
-          case Array(k, v) => Some(k.trim.stripPrefix("\"").stripSuffix("\"") -> v.toDouble)
-          case _ => None
-        }
-      }.toMap).getOrElse(Map.empty[String, Double])
-
   /** the committed floor: per-key wall floor + per-key shuffle-byte
     * floor (r14 verdict #2); `loaded` = whether a non-empty baseline
     * actually parsed; `sf` = the baseline's recorded SF dir (a floor
-    * measured at one SF must never min-merge with a run at another).
+    * measured at one SF must never min-merge with a run at another);
+    * `calmGateLoad` = the calmness bar a new run is annotated against:
+    * the post-gate load of the last run that ITSELF satisfied run_calm,
+    * carried forward in the floor record. (r13 ADVICE: the floor file is
+    * rewritten on every run, calm or not, so comparing against the
+    * PREVIOUS run's gate load let one noisy run drift the +0.5 bar
+    * upward until only the 3.0 admission gate capped it.)
     */
-  private final case class PrevFloor(walls: Map[String, Double],
-      shuffleBytes: Map[String, Double], loaded: Boolean, sf: Option[String])
+  private[graft] final case class PrevFloor(walls: Map[String, Double],
+      shuffleBytes: Map[String, Double], loaded: Boolean, sf: Option[String],
+      calmGateLoad: Option[Double])
+  private val NoFloor = PrevFloor(Map.empty, Map.empty, false, None, None)
 
-  private def readPrevAt(path: String): PrevFloor =
+  /** Parse a floor record; a missing or unparseable file is no floor. */
+  private[graft] def readPrevAt(path: String): PrevFloor =
     try {
-      val txt = new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
-      val walls = readMap(txt, "queries")
-      val sf = """"sf":"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
-      PrevFloor(walls, readMap(txt, "shuffle_bytes"), walls.nonEmpty, sf)
-    } catch { case _: Throwable => PrevFloor(Map.empty, Map.empty, false, None) }
+      import scala.jdk.CollectionConverters._
+      val root = Json.mapper.readTree(Paths.get(path).toFile)
+      def nums(field: String): Map[String, Double] =
+        Option(root.get(field)).filter(_.isObject).map(_.properties.asScala
+          .map(e => e.getKey -> e.getValue.asDouble).toMap)
+          .getOrElse(Map.empty)
+      val walls = nums("queries")
+      PrevFloor(walls, nums("shuffle_bytes"), walls.nonEmpty,
+        Option(root.get("sf")).map(_.asText),
+        Option(root.get("calm_gate_load")).filter(_.isNumber).map(_.asDouble))
+    } catch { case scala.util.control.NonFatal(_) => NoFloor }
 
-  /** Load the floor for `sfDir`: the SF-stamped file first, the legacy
-    * un-stamped bench_prev.json as a migration fallback — and in BOTH
-    * cases a floor whose recorded sf differs from this run's is
-    * REFUSED outright (loaded=false), not merely excluded from the
-    * merge: vs_prev deltas and ≥2×-mover re-runs against another SF's
-    * walls are meaningless, which is how the r10-era cross-SF noise
-    * got in. Returns the floor plus the path it came from (the calm
-    * bar is read from the same file).
+  /** Load the floor for `sfDir` from its SF-stamped file. A floor whose
+    * recorded sf differs from this run's is REFUSED outright
+    * (loaded=false), not merely excluded from the merge: vs_prev deltas
+    * and ≥2×-mover re-runs against another SF's walls are meaningless,
+    * which is how the r10-era cross-SF noise got in.
     */
-  private def readPrev(sfDir: String): (PrevFloor, String) = {
-    val stamped = prevPathFor(sfDir)
-    val (raw, path) =
-      if (Files.exists(Paths.get(stamped))) (readPrevAt(stamped), stamped)
-      else (readPrevAt(LegacyPrevPath), LegacyPrevPath)
+  private def readPrev(sfDir: String): PrevFloor = {
+    val path = prevPathFor(sfDir)
+    val raw = readPrevAt(path)
     if (raw.loaded && !raw.sf.forall(_ == sfDir)) {
       System.err.println(s"bench: floor at $path is for sf=${raw.sf.getOrElse("?")}, " +
         s"this run is $sfDir — refusing it (starting floorless)")
-      (PrevFloor(Map.empty, Map.empty, false, None), path)
-    } else (raw, path)
+      NoFloor
+    } else raw
   }
 
   private def f3(d: Double): String = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
@@ -230,7 +208,6 @@ object Bench {
     // the write guard would drop the update — a silently floorless run.
     val sfDir = Paths.get(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
       .toAbsolutePath.normalize.toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // ---- ambient-load gate (r10 verdict #4) --------------------------
     // The r10 committed bench published 3-20x noise because BOTH min-of-2
     // samples ran under loadavg ~10: min-of-N bounds a spike inside the
@@ -257,24 +234,12 @@ object Bench {
       Thread.sleep(30000)
     }
     val gatedLoad = loadAvg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // warehouse (bucketed demo tables) + shuffle/spill scratch on the
-      // RAM-backed Tmp base: round 3's driver run showed the IO-heavy
-      // keys inflating 3-11× under data-disk contention (see graft.Tmp)
-      .config("spark.sql.warehouse.dir", Tmp.dir("wh").toString)
-      .config("spark.local.dir", Tmp.dir("local").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark) // native exprs + the HOF-dot rewrite rule
+    val spark = Session.local()
     // untimed warm-up: JVM/codegen/parquet-reader paths, so per-query
     // numbers reflect steady state rather than first-job init cost.
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    val (prevFloor, floorReadPath) = readPrev(sfDir)
+    val prevFloor = readPrev(sfDir)
     val prev = prevFloor.walls
     val prevLoaded = prevFloor.loaded
     // per-key byte telemetry (r14 verdict #2): listener registered
@@ -435,7 +400,7 @@ object Bench {
     // whether this run met the calmness bars of the floor it fed. The
     // SF guard: a floor measured at one SF never merges with a run at
     // another — a changed SF resets the floor to this run.
-    val prevGateLoad = if (prevLoaded) readPrevCalmGateLoad(floorReadPath) else None
+    val prevGateLoad = if (prevLoaded) prevFloor.calmGateLoad else None
     val runCalm = shouldPromote(nPolluted, gatedLoad, maxLoad, prevGateLoad)
     // carry the calm bar forward: this run's gate load if it was calm,
     // else the inherited bar unchanged (a noisy run must not move it)

@@ -16,9 +16,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * compression codec's determinism. So Bench now records, per key,
   * the total shuffle bytes written and bytes spilled across every job
   * the key ran, and the floor file min-merges them beside the wall
-  * floors — a plan regression (e.g. GRAFT_NO_NATIVE_MINHASH re-adding
-  * interpreted HOF passes, or a lost hash-early rewrite re-shuffling
-  * strings) trips the byte diff on a calm OR a loaded box, while
+  * floors — a plan regression (e.g. a lost hash-early rewrite
+  * re-shuffling strings) trips the byte diff on a calm OR a loaded box, while
   * ambient load alone never does.
   *
   * Mechanics: a [[SparkListener]] accumulates TaskMetrics counters at

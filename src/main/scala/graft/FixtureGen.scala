@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Materialize an sf1-scale correctness fixture (r13 verdict #1).
   *
   * The shipped testdata tops out at sf0.1 (~600 k lineitem / 5 k docs),
@@ -29,16 +27,7 @@ object FixtureGen {
     val base = sys.env.getOrElse("GRAFT_FIXTURE_BASE", "/root/testdata/sf0.1")
     val factor = sys.env.get("GRAFT_FIXTURE_FACTOR").flatMap(v =>
       scala.util.Try(v.toInt).toOption).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Tmp.dir("wh").toString)
-      .config("spark.local.dir", Tmp.dir("local").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val marker = java.nio.file.Paths.get(dest, "BASE")
     val stamp = s"$base x$factor identityRep0"
     val cached = java.nio.file.Files.exists(marker) &&

@@ -17,12 +17,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftFunctions.bloomContainsDescriptor)
     ext.injectFunction(GraftFunctions.md5PrefixDescriptor)
     ext.injectFunction(GraftFunctions.minHashSigDescriptor)
-    // same kill-switch as register(): an A/B "OFF" run must stay off
-    // through BOTH installation paths
-    if (!sys.env.contains("GRAFT_NO_HOF_DOT"))
-      ext.injectOptimizerRule(_ => graft.plans.RewriteHofDot)
-    if (!sys.env.contains("GRAFT_NO_NATIVE_MD5"))
-      ext.injectOptimizerRule(_ => graft.plans.RewriteMd5Prefix)
+    ext.injectOptimizerRule(_ => graft.plans.RewriteHofDot)
+    ext.injectOptimizerRule(_ => graft.plans.RewriteMd5Prefix)
   }
 }
 
@@ -154,20 +150,17 @@ object GraftFunctions {
     reg.createOrReplaceTempFunction("graft_might_contain", buildBloomContains, "built-in")
     reg.createOrReplaceTempFunction("graft_md5_prefix", buildMd5Prefix, "built-in")
     reg.createOrReplaceTempFunction("graft_minhash_sig", buildMinHashSig, "built-in")
-    // the HOF-dot rewrite rides along with function registration so
-    // every harness session gets it (GRAFT_NO_HOF_DOT disables for A/B
-    // measurement). check-then-append is raced under concurrent query
-    // builders (dotCol calls register per column), so serialize on the
-    // experimental methods object — idempotent for real
-    if (!sys.env.contains("GRAFT_NO_HOF_DOT")) spark.experimental.synchronized {
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteHofDot))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.RewriteHofDot
-    }
-    if (!sys.env.contains("GRAFT_NO_NATIVE_MD5")) spark.experimental.synchronized {
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteMd5Prefix))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.RewriteMd5Prefix
+    // the HOF-dot and md5-prefix rewrites ride along with function
+    // registration so every harness session gets them (an A/B against
+    // the built-in forms takes them out of extraOptimizations).
+    // check-then-append is raced under concurrent query builders (dotCol
+    // calls register per column), so serialize on the experimental
+    // methods object — idempotent for real
+    spark.experimental.synchronized {
+      val have = spark.experimental.extraOptimizations
+      val missing = Seq(graft.plans.RewriteHofDot, graft.plans.RewriteMd5Prefix)
+        .filterNot(have.contains)
+      if (missing.nonEmpty) spark.experimental.extraOptimizations = have ++ missing
     }
   }
 

@@ -383,17 +383,7 @@ object PlanLint {
     // across rounds line up; every dir also lands in "aqe_runs".
     val aqeSfs = args.drop(2).toSeq
     val aqeSf = aqeSfs.headOption
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Tmp.dir("wh").toString)
-      .config("spark.local.dir", Tmp.dir("local").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
+    val spark = Session.local()
     val reports = lintAll(spark, sf)
     val flagged = reports.filter(_.flags.nonEmpty)
     val body = reports.map { r =>

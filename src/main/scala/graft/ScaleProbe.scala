@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Corpus-scale throughput probe — the measurement behind BASELINE.md
@@ -54,26 +53,17 @@ object ScaleProbe {
       scala.util.Try(v.toInt).toOption).getOrElse(16)
     val keys = sys.env.get("GRAFT_PROBE_KEYS")
       .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(DefaultKeys)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle partitions sized to the WORKING SET, not the core count
-    // (the default elsewhere): at ×F beyond RAM, cpus-many partitions
-    // make each task's sort spill hundreds of runs, and the final
-    // spill-merge OOMs on the per-run ReadAheadInputStream buffers
-    // before any row moves (measured: ×16 wedge fan, 8 partitions,
-    // 4 GiB heap). A real cluster runs thousands of shuffle
-    // partitions for exactly this reason; AQE coalesces them back
-    // when small.
-    val shufP = sys.env.getOrElse("GRAFT_PROBE_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Tmp.dir("wh").toString)
-      .config("spark.local.dir", Tmp.dir("local").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark) // native exprs + the HOF-dot rewrite rule
+    // GRAFT_PROBE_SHUFFLE sizes shuffle partitions to the WORKING SET,
+    // not the core count (the Session default): at ×F beyond RAM,
+    // cpus-many partitions make each task's sort spill hundreds of
+    // runs, and the final spill-merge OOMs on the per-run
+    // ReadAheadInputStream buffers before any row moves (measured: ×16
+    // wedge fan, 8 partitions, 4 GiB heap). A real cluster runs
+    // thousands of shuffle partitions for exactly this reason; AQE
+    // coalesces them back when small.
+    val spark = Session.local()
+    sys.env.get("GRAFT_PROBE_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
 
     // replication lives in graft.Replicate (shared with FixtureGen);
     // the probe keeps identityRep0=false for continuity with the

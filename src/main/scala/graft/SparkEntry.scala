@@ -35,9 +35,19 @@ object SparkEntry {
     queries("join_5way_flagship")(spark, "/root/testdata/sf0.001")
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    packs.flatMap(_.queries).toMap
+    merged(packs.map(_.queries), "queries")
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    packs.flatMap(_.oracleSql).toMap
+    merged(packs.map(_.oracleSql), "oracleSql")
+
+  /** Union of per-pack maps that refuses to let a later pack silently
+    * shadow an earlier pack's key. */
+  private[graft] def merged[V](maps: Seq[Map[String, V]], what: String): Map[String, V] = {
+    val dups = maps.flatMap(_.keys).groupBy(identity).collect {
+      case (k, ks) if ks.size > 1 => k }
+    require(dups.isEmpty,
+      s"SparkEntry.$what: key(s) defined by more than one pack: ${dups.toSeq.sorted.mkString(", ")}")
+    maps.flatten.toMap
+  }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,21 +15,7 @@ object Verify {
     // dir (r8 ADVICE) — reject up front, before any compute
     require(sfDirs.map(p => Paths.get(p).getFileName.toString).distinct.size == sfDirs.size,
       s"duplicate sf-dir basenames in $sfArg")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // default INT96 timestamp output is kept deliberately: it
-      // serializes naive wall-clock values, matching the oracle's naive
-      // TIMESTAMPs when the driver re-reads the dumps (TIMESTAMP_MICROS
-      // would tag isAdjustedToUTC=true and read back tz-aware).
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Tmp.dir("wh").toString)
-      .config("spark.local.dir", Tmp.dir("local").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark) // native exprs + the HOF-dot rewrite rule
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     for (sfDir <- sfDirs) {
       val dest =
@@ -46,20 +31,9 @@ object Verify {
           }
         }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // Jackson escapes quotes, backslashes and every control char: a tab
+    // or CR in builder-authored SQL must not break the driver's json.load
+    val json = Json.mapper.writeValueAsString(SparkEntry.oracleSql)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // sweep mode: tools/check.py reads <dir>/oracle_sql.json per SF dir
     if (sfDirs.length > 1) sfDirs.foreach { sfDir =>

@@ -21,8 +21,7 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * md5-bound scans (minhash's 16 permutations per shingle, simhash's
   * per-token hash, the Bloom/HLL/KMV probe digests) skip four string
   * allocations per hash. Installed by [[graft.plans.RewriteMd5Prefix]]
-  * so every declarative call site upgrades with zero query edits;
-  * `GRAFT_NO_NATIVE_MD5` disables for A/B measurement.
+  * so every declarative call site upgrades with zero query edits.
   */
 case class Md5PrefixLong(child: Expression, nibbles: Int)
     extends UnaryExpression {

@@ -39,17 +39,12 @@ object MinHashLSH {
     * permutations per element — the declarative form below runs
     * numPerm interpreted higher-order passes and allocates numPerm
     * intermediate arrays per row, which dominated dedup_minhash_lsh at
-    * sf1); GRAFT_NO_NATIVE_MINHASH falls back for A/B, bit-identical
-    * by MinHashSigSpec. Resolution uses call_function, so the session
-    * must have GraftFunctions.register'd (every harness session does).
+    * sf1); bit-identical to the declarative form by MinHashSigSpec.
+    * Resolution uses call_function, so the session must have
+    * GraftFunctions.register'd (every harness session does).
     */
   def signature(shingleHashes: Column, numPerm: Int): Column =
-    if (sys.env.contains("GRAFT_NO_NATIVE_MINHASH"))
-      array((0 until numPerm).map { i =>
-        val (a, b) = coef(i)
-        array_min(transform(shingleHashes, x => pmod(pmod(x, lit(P)) * a + b, lit(P))))
-      }: _*)
-    else call_function("graft_minhash_sig", shingleHashes, lit(numPerm))
+    call_function("graft_minhash_sig", shingleHashes, lit(numPerm))
 
   /** per-row band rows (id, band, key) from a signature column — the
     * LSH index surface itself: persisted as a table, it is the thing

@@ -126,7 +126,7 @@ object Triangles {
     * graceful: toward no-op pruning, never wrong answers. */
   private[graft] def prune(und: DataFrame, wedges: DataFrame): DataFrame = {
     graft.GraftFunctions.register(und.sparkSession)
-    // und is localCheckpoint'ed in stages(): the count is a block scan
+    // und is localCheckpoint'ed in build(): the count is a block scan
     val edgeCount = math.max(2000000L, und.count())
     val bits = math.min(8L * edgeCount, 1L << 30)
     // BloomFilterAggregate SILENTLY clamps both sizing args to the
@@ -174,16 +174,6 @@ object Triangles {
       .filter(call_function("graft_might_contain", lit(bf),
         xxhash64(col("y"), col("z"))))
       .select("x", "y", "z")
-  }
-
-  /** the algorithm's three intermediates — (canonical undirected edges,
-    * degree-oriented DAG, open wedges) — exposed so GraphBaseline can
-    * measure the actual shuffle volumes the Σ outdeg² bound predicts
-    * and PlanSpec/bench tooling can inspect stages without duplicating
-    * the construction. */
-  private[graft] def stages(edges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val st = build(edges)
-    (st.und, st.dag, st.wedges)
   }
 
   private def build(edges: DataFrame): Built = {

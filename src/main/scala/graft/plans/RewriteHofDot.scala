@@ -35,8 +35,9 @@ import graft.expr.DotProduct
   *
   * Installed per-session by `GraftFunctions.register` (experimental
   * extraOptimizations, idempotent) and for SQL-conf users via
-  * `GraftExtensions.injectOptimizerRule`; `GRAFT_NO_HOF_DOT` in the
-  * environment disables installation for A/B measurement.
+  * `GraftExtensions.injectOptimizerRule`. An A/B against the HOF form
+  * takes the rule out of the session's extraOptimizations (perfbench's
+  * expression probe does).
   */
 object RewriteHofDot extends Rule[LogicalPlan] {
 

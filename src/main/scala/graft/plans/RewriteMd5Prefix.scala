@@ -32,8 +32,8 @@ import graft.expr.Md5PrefixLong
   * NULL but a long→int cast would WRAP — that arm must keep the
   * string semantics). Anything else — other offsets, dynamic
   * lengths, other bases — keeps the string semantics. Installed alongside RewriteHofDot by
-  * `GraftFunctions.register` and `GraftExtensions`;
-  * `GRAFT_NO_NATIVE_MD5` disables installation for A/B measurement.
+  * `GraftFunctions.register` and `GraftExtensions`; an A/B against the
+  * string chain takes the rule out of the session's extraOptimizations.
   */
 object RewriteMd5Prefix extends Rule[LogicalPlan] {
 

@@ -240,8 +240,8 @@ object GraphMmQueries extends QueryPack {
     // TEST-only (no oracle — the quotient keys above carry the hash
     // gate for the same operators): the raw-scale skew runs the r7
     // verdict asked for, timed by Bench every round and measured in
-    // BASELINE.md §graph-scale (graft.GraphBaseline regenerates the
-    // numbers). SemanticsSpec asserts their structural invariants.
+    // BASELINE.md §graph-scale (`perfbench/run.py --trace 1` gives the
+    // per-stage shuffle bytes). SemanticsSpec asserts their structural invariants.
     "graph_pagerank_raw" -> ((s, d) => {
       // the SAME PageRank operator on the raw customer→order FK graph
       // at full id resolution (~165k nodes / 150k edges at sf0.1, vs

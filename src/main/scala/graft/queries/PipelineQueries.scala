@@ -396,22 +396,12 @@ object PipelineQueries extends QueryPack {
       // (eager executor-block checkpoint): the df aggregate and the
       // join-back branch otherwise each recompute the full
       // tokenize+shingle pipeline (the minhash lesson, same round).
-      // GRAFT_BYTES_DEMO_WIDE (r16): keep the RAW gram string as the
-      // shuffle key — the un-optimized pre-r14 plan, result-identical
-      // (the output only aggregates per doc_id). Exists to demonstrate
-      // the bench byte-regression flag END TO END: this is exactly the
-      // byte-visible regression class the floor guards (strings moving
-      // where 8-byte hashes should), unlike GRAFT_NO_NATIVE_MINHASH,
-      // which is a CPU-side rewrite that shuffles identical bytes
-      // (BASELINE.md §byte-floor note).
-      val wideDemo = sys.env.contains("GRAFT_BYTES_DEMO_WIDE")
       // Tables.spread: the 10-gram explode + md5 otherwise run on the
       // single-row-group scan's one task (r17); no-op at real scale
       val sh = T.spread(T.documents(s, d))
         .select(col("doc_id"), explode(array_distinct(
           TextOps.shingles(TextOps.tokens(col("text")), 10))).as("g"))
-        .select(col("doc_id"),
-          (if (wideDemo) col("g") else TextOps.md5Long(col("g"))).as("gh"))
+        .select(col("doc_id"), TextOps.md5Long(col("g")).as("gh"))
         .localCheckpoint(true)
       val dupGrams = sh.groupBy("gh").agg(count(lit(1)).as("nd"))
         .filter(col("nd") >= 2)

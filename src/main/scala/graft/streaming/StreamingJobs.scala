@@ -229,6 +229,10 @@ object StreamingJobs {
 
   private[graft] def stageChunks(rowsWithChunk: DataFrame, tag: String,
       maxChunk: Long): String = {
+    // maxChunk + 1 becomes the range-partition count: reject what an Int
+    // cannot hold before any scratch dir exists
+    require(maxChunk >= 0 && maxChunk < Int.MaxValue,
+      s"stageChunks($tag): maxChunk $maxChunk outside [0, Int.MaxValue)")
     val root = Tmp.dir(s"${tag}_stage")
     val stage = root.resolve("p").toString
     try {

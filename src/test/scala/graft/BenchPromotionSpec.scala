@@ -80,4 +80,41 @@ class BenchPromotionSpec extends AnyFunSuite {
     assert(Bench.prevPathFor("/root/testdata/sf1")
       == Bench.prevPathFor("/root/repo/fixtures/sf1"))
   }
+
+  test("the floor reader returns what Python's json reads from the committed sf0.001 floor") {
+    val path = "bench_prev_sf0.001.json"
+    val floor = Bench.readPrevAt(path)
+    // independent reference: Python's json module, one "k<TAB>v" line
+    // per entry, floats printed with repr (shortest round-trip form)
+    val py = Seq("python3", "-c",
+      """import json,sys
+        |d = json.load(open(sys.argv[1]))
+        |for sec in ("queries", "shuffle_bytes"):
+        |    for k, v in d[sec].items(): print(sec + "\t" + k + "\t" + repr(float(v)))
+        |print("sf\t" + d["sf"])
+        |print("calm_gate_load\t" + repr(float(d["calm_gate_load"])))""".stripMargin,
+      path)
+    val out = try scala.sys.process.Process(py).!!
+      catch { case e: java.io.IOException => cancel(s"python3 unavailable: $e") }
+    val rows = out.linesIterator.map(_.split("\t", -1).toSeq).toSeq
+    def section(name: String): Map[String, Double] =
+      rows.collect { case Seq(`name`, k, v) => k -> v.toDouble }.toMap
+    assert(floor.loaded)
+    assert(floor.walls.nonEmpty) // every key of the run, failed ones as -1
+    assert(floor.walls == section("queries"))
+    assert(floor.shuffleBytes.nonEmpty && floor.shuffleBytes == section("shuffle_bytes"))
+    assert(floor.sf == rows.collectFirst { case Seq("sf", v) => v })
+    assert(floor.calmGateLoad ==
+      rows.collectFirst { case Seq("calm_gate_load", v) => v.toDouble })
+  }
+
+  test("a missing or malformed floor file reads as no floor") {
+    assert(!Bench.readPrevAt("/nonexistent/bench_prev.json").loaded)
+    val f = java.nio.file.Files.createTempFile("floor", ".json")
+    try {
+      java.nio.file.Files.writeString(f, """{"queries":{"a":1.0""")
+      val p = Bench.readPrevAt(f.toString)
+      assert(!p.loaded && p.walls.isEmpty && p.sf.isEmpty && p.calmGateLoad.isEmpty)
+    } finally java.nio.file.Files.deleteIfExists(f)
+  }
 }

@@ -45,6 +45,18 @@ class PlanSpec extends SparkSpec {
       _.outputPartitioning.isInstanceOf[
         org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning])
 
+  /** The other half of the [[nonSpreadExchanges]] pins: round-robin
+    * exchanges are excused only as Tables.spread's, so a key may carry
+    * at most one per plan branch that reads a spread frame (a frame
+    * read by two consumers shuffles in both). A stray repartition(n)
+    * trips this instead of hiding under the excluded class. */
+  private def assertSpreadOnly(p: SparkPlan, spreadReads: Int): Unit = {
+    val rr = p.collect { case e: ShuffleExchangeExec => e }.length -
+      nonSpreadExchanges(p).length
+    assert(rr <= spreadReads,
+      s"$rr round-robin exchanges for $spreadReads read(s) of Tables.spread frames")
+  }
+
   test("join_5way_flagship: both dimensions broadcast, aggregation is partial+final, no cartesian") {
     val p = planOf("join_5way_flagship")
     val bhj = p.collect { case j: BroadcastHashJoinExec => j }
@@ -215,6 +227,7 @@ class PlanSpec extends SparkSpec {
     // back over the scale-invariant exchanges)
     assert(nonSpreadExchanges(p).length <= 2,
       "expected only the lang-agg exchange + the sort exchange")
+    assertSpreadOnly(p, spreadReads = 1)
     assert(p.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }.isEmpty)
   }
 
@@ -229,6 +242,7 @@ class PlanSpec extends SparkSpec {
     // the window/agg partitioning reuse is what the bound protects
     assert(nonSpreadExchanges(p).length <= 2,
       "per-stream aggregate must reuse the window's partitioning")
+    assertSpreadOnly(p, spreadReads = 1)
   }
 
   test("pipeline_funnel: decontam dict broadcasts, no cartesian, no window") {
@@ -454,6 +468,8 @@ class PlanSpec extends SparkSpec {
     // Tables.spread's round-robin excluded (see text_pii_scrub pin)
     assert(nonSpreadExchanges(p).length <= 4,
       "quantization grew an exchange beyond bounds/report/sort")
+    // the spread embeddings feed the bounds aggregate and the encode pass
+    assertSpreadOnly(p, spreadReads = 2)
   }
 
   test("merge_scd2: history explode sits above the one full-outer join") {
@@ -471,6 +487,8 @@ class PlanSpec extends SparkSpec {
     // Tables.spread's round-robin excluded (see text_pii_scrub pin)
     assert(nonSpreadExchanges(p).length <= 3,
       "merge_scd2 grew an exchange beyond join inputs + final sort")
+    // the spread docs feed prev, curr and the added-docs union branch
+    assertSpreadOnly(p, spreadReads = 3)
   }
 
   test("win_linreg: both window passes reuse one user_id partitioning") {
@@ -795,6 +813,7 @@ class PlanSpec extends SparkSpec {
     // Tables.spread's round-robin excluded (see text_pii_scrub pin)
     assert(nonSpreadExchanges(p).length <= 2,
       "expected only the agg + sort exchanges")
+    assertSpreadOnly(p, spreadReads = 1)
   }
 
   test("join_fuzzy_blocked: the fuzzy join is block-equi over the distinct-name aggregate") {

@@ -30,6 +30,38 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(orphans.isEmpty, s"oracleSql without queries: $orphans")
   }
 
+  test("a key defined by two packs fails on access, naming the key") {
+    object A extends QueryPack {
+      def queries: Map[String, QueryFn] =
+        Map("shared" -> ((s, _) => s.range(1).toDF()), "only_a" -> ((s, _) => s.range(1).toDF()))
+      def oracleSql: Map[String, String] = Map("shared" -> "SELECT 1", "only_a" -> "SELECT 2")
+    }
+    object B extends QueryPack {
+      def queries: Map[String, QueryFn] = Map("shared" -> ((s, _) => s.range(2).toDF()))
+      def oracleSql: Map[String, String] = Map("shared" -> "SELECT 3")
+    }
+    val packs = Seq(A, B)
+    val q = intercept[IllegalArgumentException] {
+      SparkEntry.merged(packs.map(_.queries), "queries")
+    }
+    assert(q.getMessage.contains("shared") && !q.getMessage.contains("only_a"), q.getMessage)
+    val o = intercept[IllegalArgumentException] {
+      SparkEntry.merged(packs.map(_.oracleSql), "oracleSql")
+    }
+    assert(o.getMessage.contains("oracleSql") && o.getMessage.contains("shared"), o.getMessage)
+    // disjoint packs merge as before
+    assert(SparkEntry.merged(Seq(A.oracleSql - "shared", B.oracleSql), "oracleSql") ==
+      Map("only_a" -> "SELECT 2", "shared" -> "SELECT 3"))
+  }
+
+  test("oracle_sql.json: the shared mapper escapes control chars and round-trips") {
+    val tricky = Map("k\"1" -> "SELECT 'a\tb'\r\nFROM t -- \u0001\\")
+    val json = Json.mapper.writeValueAsString(tricky ++ SparkEntry.oracleSql)
+    assert(!json.exists(c => c < ' '), "raw control char in the JSON text")
+    val back = Json.mapper.readValue(json, classOf[Map[String, String]])
+    assert(back == tricky ++ SparkEntry.oracleSql)
+  }
+
   /** the TEST-only allowlist — keys whose semantics cannot back a hash
     * oracle (probabilistic sketches/recall, trigger-dependent streaming,
     * raw-scale graph shapes) and instead carry ScalaTest semantic

@@ -522,6 +522,19 @@ class SemanticsSpec extends SparkSpec {
     } finally Tmp.quietDeleteRecursively(java.nio.file.Paths.get(stage).getParent)
   }
 
+  test("staging contract: an out-of-range maxChunk is rejected before any staging") {
+    // maxChunk + 1 is the range-partition count; a negative or
+    // Int-overflowing value must fail by name, not wrap
+    import spark.implicits._
+    val rows = Seq((0L, "a", 0L)).toDF("id", "v", "chunk")
+    Seq(-1L, Int.MaxValue.toLong, Long.MaxValue).foreach { bad =>
+      val e = intercept[IllegalArgumentException] {
+        graft.streaming.StreamingJobs.stageChunks(rows, "range", bad)
+      }
+      assert(e.getMessage.contains(s"maxChunk $bad"))
+    }
+  }
+
   test("streaming stateful per-user counts equal batch counts") {
     val streamed = SparkEntry.queries("stream_stateful_count")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
