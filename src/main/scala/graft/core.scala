@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** A named bundle of queries plus their DuckDB oracle SQL.
   *
@@ -424,7 +425,51 @@ object Tables {
     // testdata generations agree on classic TimestampType with
     // identical µs values (session tz is UTC in every entrypoint).
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    schemaOf(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** Spark's inferred schema per parquet file version, memoized for the
+    * JVM beside [[rowGroupCache]]: without it every `t` read launches a
+    * one-task schema-inference job (a fixed per-job cost, no data). The
+    * first read of each version still infers through Spark, so schemas
+    * stay exactly Spark's own. The key is the path plus the session
+    * values of the inference confs (`events` flips nanosAsLong); the
+    * entry is valid only while every file under the path keeps its
+    * length and modification time, so an overwrite re-infers. A path
+    * that cannot be listed is None and is not cached (the plain read
+    * then raises Spark's own error).
+    */
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[String]), (Seq[(String, Long, Long)], StructType)]()
+  /** the inference confs this object sets on the session */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+  private[graft] def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
+    // (file, length, modification time) for every file under the path
+    val version =
+      try {
+        val p = new org.apache.hadoop.fs.Path(path)
+        val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+        val b = Seq.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        Some(b.result().sorted)
+      } catch { case scala.util.control.NonFatal(_) => None }
+    version.map { v =>
+      val key = (path, inferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")))
+      Option(schemaCache.get(key)).collect { case (`v`, s) => s }.getOrElse {
+        val s = spark.read.parquet(path).schema
+        schemaCache.put(key, (v, s))
+        s
+      }
+    }
   }
 
   def region(s: SparkSession, d: String)    = t(s, d, "region")

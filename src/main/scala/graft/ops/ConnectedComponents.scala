@@ -9,11 +9,11 @@ import org.apache.spark.storage.StorageLevel
   * pairs → duplicate clusters → keep one representative per cluster.
   *
   * Same driver-loop discipline as [[BFS]]: the labels stay distributed
-  * (persisted per round, materialized by the convergence count, old
-  * round unpersisted), the driver carries only a changed-row count, and
-  * each round is one shuffle-join on vertex id plus a min-aggregate —
-  * rounds needed = graph diameter (dup clusters are shallow; the cap is
-  * a safety net, not a tuning knob).
+  * (each round is one eager local checkpoint), the driver carries only
+  * the label sum observed on that same action, and each round is one
+  * shuffle-join on vertex id plus a min-aggregate — one Spark job per
+  * round, rounds needed = graph diameter (dup clusters are shallow; the
+  * cap is a safety net, not a tuning knob).
   */
 object ConnectedComponents {
 
@@ -33,57 +33,47 @@ object ConnectedComponents {
     *         to the minimum vertex id reachable from it
     */
   def labels(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
-    // the label table is |V| rows — per-round cost at the session's 32
-    // shuffle partitions is pure task-scheduling floor. Pin the loop to
-    // a few partitions (actions below materialize under it), restored
-    // after; the returned frame is persisted, so consumers re-read the
-    // cached partitions rather than re-planning under the low setting.
-    val key = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(key)
-    spark.conf.set(key, "8")
+    // both directions PLUS self-loops in one explode: the (possibly
+    // expensive) pair-mining lineage is consumed exactly once — a
+    // union of two selects re-ran it per branch (measured: the
+    // Jaccard pipeline executed twice inside the first job). With
+    // self-loops in the edge list, "min over in-neighbors" already
+    // includes the vertex's own label, so init and rounds are each a
+    // single join/aggregate. The edge list is edge-sized: a
+    // lineage-keeping persist (lost blocks recompute), filled by the
+    // init action and dropped before return.
+    val edges = pairs.select(explode(array(
+        struct(col("a").as("u"), col("b").as("v")),
+        struct(col("b").as("u"), col("a").as("v")),
+        struct(col("a").as("u"), col("a").as("v")),
+        struct(col("b").as("u"), col("b").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // Convergence check: labels only DECREASE, so Σlabels is strictly
+    // decreasing until the fixpoint — one aggregate per round, no join
+    // against the previous labels, observed on the round's own
+    // checkpointing action (no separate job). The label table is
+    // vertex-sized: each round is an eager local checkpoint, so lineage
+    // stops there and a lost block fails loudly with Spark's
+    // "Checkpoint block ... not found". SUM over zero rows is NULL —
+    // coalesce so an edgeless pair graph returns its (empty) label
+    // table instead of throwing.
+    def materialize(df: DataFrame) =
+      BFS.checkpointObserving(df, coalesce(sum("rep"), lit(0L)))
     try {
-      // both directions PLUS self-loops in one explode: the (possibly
-      // expensive) pair-mining lineage is consumed exactly once — a
-      // union of two selects re-ran it per branch (measured: the
-      // Jaccard pipeline executed twice inside the first job). With
-      // self-loops in the edge list, "min over in-neighbors" already
-      // includes the vertex's own label, so init and rounds are each a
-      // single join/aggregate.
-      val edges = pairs.select(explode(array(
-          struct(col("a").as("u"), col("b").as("v")),
-          struct(col("b").as("u"), col("a").as("v")),
-          struct(col("a").as("u"), col("a").as("v")),
-          struct(col("b").as("u"), col("b").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // round 0 folded into init: rep(v) = min(v, neighbors(v))
-      var rep = edges.groupBy(col("u")).agg(min(col("v")).as("rep"))
-        .select(col("u").as("v"), col("rep"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // Convergence check: labels only DECREASE, so Σlabels is strictly
-      // decreasing until the fixpoint — one aggregate per round, no
-      // join against the previous labels. The init aggregate also
-      // materializes edges+rep, so a clique-shaped graph (the common
-      // dup-cluster topology; min-neighbor init already solves it)
-      // finishes after ONE confirming round. Per-round cost here is
-      // fixed job overhead, not data (measured): keep rounds to plain
-      // hooking — l(v) ← min(l(v), l(neighbors)) — which is 2 stages;
-      // worst-case rounds = component diameter, with maxRounds as the
-      // safety net.
-      // SUM over zero rows is NULL — coalesce so an edgeless pair graph
-      // returns its (empty) label table instead of throwing.
-      def labelSum(df: DataFrame): Long =
-        df.agg(coalesce(sum("rep"), lit(0L))).head().getLong(0)
-      var prevSum = labelSum(rep)
+      // round 0 folded into init: rep(v) = min(v, neighbors(v)). A
+      // clique-shaped graph (the common dup-cluster topology) is solved
+      // by init and finishes after ONE confirming round. Per-round cost
+      // here is fixed job overhead, not data (measured): keep rounds to
+      // plain hooking; worst-case rounds = component diameter, with
+      // maxRounds as the safety net.
+      var (rep, prevSum) = materialize(edges.groupBy(col("u")).agg(min(col("v")).as("rep"))
+        .select(col("u").as("v"), col("rep")))
       var round = 0
       var converged = false
       while (!converged && round < maxRounds) {
         round += 1
-        val next = propagateRound(edges, rep)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val s = labelSum(next) // materializes `next`
-        rep.unpersist()
+        val (next, s) = materialize(propagateRound(edges, rep))
         rep = next
         converged = s == prevSum
         prevSum = s
@@ -92,16 +82,9 @@ object ConnectedComponents {
         log.warn(s"ConnectedComponents: maxRounds=$maxRounds reached without " +
           "convergence — labels are a partial closure (component diameter " +
           "exceeds the round cap); raise maxRounds for deep chain graphs")
-      edges.unpersist()
-      // hand back RDD-backed blocks instead of the CacheManager entry:
-      // cached Datasets live until an explicit unpersist (a per-call leak
-      // for a query-shaped API with no unpersist hook), while local-
-      // checkpoint blocks are released by the ContextCleaner once the
-      // returned frame is unreferenced. The copy reads the still-cached
-      // `rep`, so materialization is a pass over cache, not a recompute.
-      val out = rep.localCheckpoint(true)
-      rep.unpersist()
-      out
-    } finally spark.conf.set(key, prevParts)
+      // local-checkpoint blocks, not a CacheManager entry: they are
+      // released by the ContextCleaner once the frame is unreferenced
+      rep
+    } finally edges.unpersist()
   }
 }

@@ -188,6 +188,27 @@ class PlanSpec extends SparkSpec {
       "min-aggregate must run partial (map-side) + final")
   }
 
+  test("BFS level round: one equi-join + one aggregate, nothing else") {
+    import spark.implicits._
+    val adj = Seq(("1", "2"), ("2", "3"), ("3", "1")).toDF("src", "dst")
+    val state = Seq(("1", 0), ("2", 1)).toDF("node", "level")
+    val p = withConf("spark.sql.adaptive.enabled", "false") {
+      graft.ops.BFS.expandRound(adj, state, 2).queryExecution.executedPlan
+    }
+    assert(p.collect { case c: CartesianProductExec => c }.isEmpty)
+    assert(p.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }.isEmpty)
+    val joins = p.collect {
+      case j: SortMergeJoinExec => j
+      case j: BroadcastHashJoinExec => j
+      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
+    }
+    assert(joins.length == 1, s"expected exactly one equi-join, got ${joins.length}")
+    // one min-level aggregate, run partial (map-side) + final — a
+    // distinct or anti-join would add a second aggregate pair or join
+    val aggs = p.collect { case a: HashAggregateExec => a }
+    assert(aggs.length == 2, s"expected one partial+final aggregate, got ${aggs.length}")
+  }
+
   test("text_contamination: the benchmark gram dict joins by broadcast") {
     // the benchmark slice is small by nature — its distinct 5-grams
     // must ship as a broadcast, never shuffle the corpus gram stream
