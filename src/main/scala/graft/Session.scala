@@ -42,4 +42,21 @@ object Session {
     GraftFunctions.register(spark)
     spark
   }
+
+  /** Run `body` with session `confs` set, then put every key back as it
+    * was — its prior value, or unset if it had none — whether `body`
+    * returns or throws. For confs a plan pins when it starts (a stream's
+    * state-store settings, an aggregate's bloom ceilings) that must not
+    * leak into later queries of a shared session.
+    */
+  def withConfs[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

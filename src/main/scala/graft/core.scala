@@ -335,23 +335,6 @@ object SessionMemo {
 
 /** Table loaders for the driver-generated parquet testdata. */
 object Tables {
-  /** Round-robin-spread a scanned table that physically CANNOT fill the
-    * cluster: the fixtures are single-row-group parquet files, and a
-    * parquet row group belongs to exactly one scan split, so every scan
-    * here is ONE effective task no matter how many (empty) splits the
-    * planner cuts — and any CPU-heavy per-row pipeline before the first
-    * exchange (tokenize → shingle → md5/sha, probe expressions) runs
-    * single-threaded (r17 profiling: 1-task jobs of 2–3.7 s inside the
-    * span/mining keys at sf0.1). Guide §2.5 input-skew class.
-    *
-    * The decision is scale-adaptive and metadata-only (no Spark job):
-    * spread only when the scan's total file bytes are under
-    * defaultParallelism × openCostInBytes — a table that small cannot
-    * produce a parallel scan no matter the layout, and the added
-    * exchange moves at most that many bytes. At any real deployment
-    * size the branch never fires. Row-count and result order are
-    * untouched (every consumer below re-shuffles or re-sorts).
-    */
   /** parquet row-group count per file, memoized — the fixtures are
     * immutable and the bench calls spread on the same handful of tables
     * hundreds of times, so each footer is read at most once per JVM.
@@ -374,6 +357,23 @@ object Tables {
       } catch { case scala.util.control.NonFatal(_) => None }
     }
 
+  /** Round-robin-spread a scanned table that physically CANNOT fill the
+    * cluster: the fixtures are single-row-group parquet files, and a
+    * parquet row group belongs to exactly one scan split, so every scan
+    * here is ONE effective task no matter how many (empty) splits the
+    * planner cuts — and any CPU-heavy per-row pipeline before the first
+    * exchange (tokenize → shingle → md5/sha, probe expressions) runs
+    * single-threaded (r17 profiling: 1-task jobs of 2–3.7 s inside the
+    * span/mining keys at sf0.1). Guide §2.5 input-skew class.
+    *
+    * The decision is scale-adaptive and metadata-only (no Spark job):
+    * spread only when the scan's total file bytes are under
+    * defaultParallelism × openCostInBytes — a table that small cannot
+    * produce a parallel scan no matter the layout, and the added
+    * exchange moves at most that many bytes. At any real deployment
+    * size the branch never fires. Row-count and result order are
+    * untouched (every consumer below re-shuffles or re-sorts).
+    */
   def spread(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
     val sc = sess.sparkContext

@@ -63,7 +63,7 @@ object IndexStore {
       Files.write(tmp.resolve("_INDEX"), stamp.getBytes("UTF-8"))
       swapInto(tmp, rootPath, stamp)
       true
-    } finally deleteRecursively(tmp) // no-op when the swap moved it
+    } finally graft.Tmp.quietDeleteRecursively(tmp) // no-op when the swap moved it
   }
 
   /** Atomically replace `root` with `tmp`. A root that became fresh
@@ -90,7 +90,7 @@ object IndexStore {
         // and move-in; their build is complete (marker-last) — yield
         ()
     }
-    deleteRecursively(old)
+    graft.Tmp.quietDeleteRecursively(old)
   }
 
   /** best-effort cleanup of crashed builders' leftovers */
@@ -109,17 +109,8 @@ object IndexStore {
           if ((n.startsWith(prefix) || n.startsWith(oldPrefix)) &&
               Files.getLastModifiedTime(p).toMillis <
                 System.currentTimeMillis() - 3600000L)
-            deleteRecursively(p)
+            graft.Tmp.quietDeleteRecursively(p)
         }
       }
-    } catch { case _: Throwable => () }
-
-  private def deleteRecursively(p: Path): Unit =
-    try {
-      if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-        val it = Files.list(p).iterator()
-        while (it.hasNext) deleteRecursively(it.next())
-      }
-      Files.deleteIfExists(p)
     } catch { case _: Throwable => () }
 }

@@ -145,10 +145,6 @@ object Triangles {
     // up to a 2^30-bit ceiling a triangle key happened to leave behind
     // (r15 ADVICE) — plans and byte telemetry of unrelated keys must
     // not depend on whether a big-graph prune ran first.
-    val prevItems = sess.conf.getOption(itemsKey)
-    val prevBits = sess.conf.getOption(bitsKey)
-    sess.conf.set(itemsKey, math.max(4000000L, edgeCount))
-    sess.conf.set(bitsKey, math.max(67108864L, bits))
     // might_contain demands a CONSTANT (or scalar subquery) filter, so
     // the bloom rides as a literal: the aggregation itself is
     // distributed (partial blooms OR-merged), only the finished filter
@@ -162,14 +158,13 @@ object Triangles {
     // thrashed a 48 GB heap to death on the sf10 validation. Eight
     // builders bound the transient filter memory at ~1 GB while the
     // 120 M-row scan stays far from the bottleneck.
-    val bf =
-      try und.coalesce(8).agg(expr(
+    val bf = graft.Session.withConfs(sess,
+        itemsKey -> math.max(4000000L, edgeCount).toString,
+        bitsKey -> math.max(67108864L, bits).toString) {
+      und.coalesce(8).agg(expr(
         s"graft_bloom_agg(xxhash64(a, b), CAST($edgeCount AS LONG), CAST($bits AS LONG))").as("bf"))
         .head.getAs[Array[Byte]](0)
-      finally {
-        prevItems.fold(sess.conf.unset(itemsKey))(sess.conf.set(itemsKey, _))
-        prevBits.fold(sess.conf.unset(bitsKey))(sess.conf.set(bitsKey, _))
-      }
+    }
     wedges
       .filter(call_function("graft_might_contain", lit(bf),
         xxhash64(col("y"), col("z"))))

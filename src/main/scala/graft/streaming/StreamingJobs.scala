@@ -1,11 +1,14 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import graft.{Tables => T, Tmp}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
+import graft.{Session, Tables => T, Tmp}
 
 /** SURVEY.md §2B category J — the trigger-dependent streaming operators
   * plus the stateful-processing family: watermark late-drop,
@@ -44,40 +47,86 @@ object StreamingJobs {
   private val EventCols =
     Seq(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
 
-  /** Stage `rowsWithChunk` (the events slice plus a `chunk` column) as
-    * chunk-partitioned parquet, start the query over a watched dir, and
-    * move chunks 0..maxChunk in as one deterministic micro-batch each.
-    * The memory-sink name is `tag`; the caller drains it via [[drain]].
+  /** How [[replayFileSource]] feeds its staged chunks to the query. */
+  private sealed trait Feed
+
+  /** One long-lived query, one deterministic micro-batch per chunk:
+    * chunk c is moved in, then processAllAvailable. `sleepMs` pauses
+    * BETWEEN batches (never before the first) — the processing-time gap
+    * the TTL semantics test needs to let state expire across batches.
+    */
+  private final case class PerChunk(sleepMs: Long = 0L) extends Feed
+
+  /** The production "drain the backlog" mode a periodic (cron-style)
+    * ingest job runs instead of an always-on stream: for each entry of
+    * `drainAfter`, move in every chunk up to it, then run one
+    * Trigger.AvailableNow query with maxFilesPerTrigger = 1 — bounded
+    * micro-batches of one file each — until it self-terminates. Every
+    * drain is a fresh query object on the SAME checkpoint, so each one
+    * after the first is a restarted process recovering source offsets
+    * and operator state.
+    */
+  private final case class AvailableNow(drainAfter: Seq[Long]) extends Feed
+
+  /** Stage `rowsWithChunk` (the replayed slice plus a `chunk` column) as
+    * chunk-partitioned parquet, then feed chunks 0..maxChunk into a
+    * watched directory that `query` reads through the production file
+    * source, as `feed` says. `query` builds the writer; the replay adds
+    * the checkpoint (and the AvailableNow trigger) and starts it. A
+    * memory sink is named `tag`; the caller drains it via [[drain]].
     * All scaffolding lives in RAM-backed scratch (graft.Tmp) and is
     * deleted quietly — a cleanup IO hiccup must never mask the result.
     */
   private def replayFileSource(spark: SparkSession, tag: String,
       rowsWithChunk: DataFrame, maxChunk: Long,
-      start: (DataFrame, String) => StreamingQuery,
-      interBatchSleepMs: Long = 0L,
-      keepNoDataBatches: Boolean = false): Unit = {
+      query: DataFrame => DataStreamWriter[Row],
+      feed: Feed = PerChunk(),
+      keepNoDataBatches: Boolean = false,
+      rocksDbState: Boolean = false): Unit = {
     val watch = Tmp.dir(s"${tag}_watch")
-    val ckpt = Tmp.dir(s"${tag}_ckpt").toString
+    val ckpt = Tmp.dir(s"${tag}_ckpt")
     var stage: String = null
-    try withReplayConfs(spark, keepNoDataBatches) { withEnvStateProvider(spark) {
+    try Session.withConfs(spark, replayConfs(keepNoDataBatches, rocksDbState): _*) {
       stage = stageChunks(rowsWithChunk, tag, maxChunk)
       assertStagedWithin(stage, maxChunk)
-      val schema = org.apache.spark.sql.types.StructType(
-        rowsWithChunk.schema.filterNot(_.name == "chunk"))
-      val q = start(spark.readStream.schema(schema).parquet(watch.toString), ckpt)
-      try feedChunks(stage, watch, maxChunk, q, interBatchSleepMs) finally {
-        sinkDescriptions.put(tag,
-          Option(q.lastProgress).map(_.sink.description).getOrElse(""))
-        q.stop()
+      val schema = StructType(rowsWithChunk.schema.filterNot(_.name == "chunk"))
+      val t0 = System.currentTimeMillis()
+      // start the query, hand it to `drive`, stop it however drive ends
+      def run(availableNow: Boolean)(drive: StreamingQuery => Unit): Unit = {
+        val reader = spark.readStream.schema(schema)
+        val source = (if (availableNow) reader.option("maxFilesPerTrigger", "1")
+          else reader).parquet(watch.toString)
+        val writer = query(source).option("checkpointLocation", ckpt.toString)
+        val q = (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+        try drive(q) finally {
+          sinkDescriptions.put(tag,
+            Option(q.lastProgress).map(_.sink.description).getOrElse(""))
+          q.stop()
+        }
       }
-    } } finally {
-      Seq(Option(stage).map(java.nio.file.Paths.get(_).getParent).orNull,
-        watch, java.nio.file.Paths.get(ckpt)).foreach(quietDelete)
-    }
+      feed match {
+        case PerChunk(sleepMs) =>
+          run(availableNow = false) { q =>
+            for (c <- 0L to maxChunk) {
+              if (c > 0 && sleepMs > 0) Thread.sleep(sleepMs)
+              moveChunk(stage, c, watch, t0)
+              q.processAllAvailable()
+            }
+          }
+        case AvailableNow(drainAfter) =>
+          var next = 0L
+          for (last <- drainAfter) {
+            for (c <- next to last) moveChunk(stage, c, watch, t0)
+            next = last + 1
+            run(availableNow = true)(_.awaitTermination()) // self-terminates when drained
+          }
+      }
+    } finally Seq(Option(stage).map(Paths.get(_).getParent).orNull, watch, ckpt)
+      .foreach(Tmp.quietDeleteRecursively)
   }
 
-  /** Session confs scoped to one replay, restored after (the stream pins
-    * each at its first batch, so set-before-start is the contract):
+  /** Session confs [[replayFileSource]] scopes to one replay (the stream
+    * pins each at its first batch, so set-before-start is the contract):
     *
     *  - shuffle.partitions = 8: modest state-partition count for the
     *    local replay; state-store commit cost scales with
@@ -88,9 +137,7 @@ object StreamingJobs {
     *    file written and verified. These checkpoints are ephemeral
     *    scratch on tmpfs, deleted seconds after the query stops;
     *    corruption detection buys nothing while costing ~3 file ops ×
-    *    ~30 checkpoint files per key. GRAFT_STREAM_CHECKPOINT_CHECKSUM
-    *    re-enables it for deployments whose checkpoints live on storage
-    *    that can actually corrupt. Integrity check, never semantics.
+    *    ~30 checkpoint files per key. Integrity check, never semantics.
     *  - noDataMicroBatches (r17, measured) OFF: with watermarks on, the
     *    engine interleaves a no-data batch after nearly every data
     *    batch (watermark advanced → shouldRunAnotherBatch) — profiled
@@ -102,11 +149,9 @@ object StreamingJobs {
     *    function of the data seen, not of interleaved no-data batches —
     *    so the union-of-batches output is unchanged (the DuckDB oracle
     *    re-proves it per key at every SF). Update/Complete-mode keys
-    *    never emitted from no-data batches at all.
-    *    GRAFT_STREAM_NODATA_BATCHES=true restores the engine default
-    *    (an always-on deployment wants eager state cleanup and timely
-    *    timers between arrivals — a replay draining a staged backlog
-    *    does not).
+    *    never emitted from no-data batches at all. (An always-on
+    *    deployment wants them for eager state cleanup and timely timers
+    *    between arrivals — a replay draining a staged backlog does not.)
     *    ONE key keeps them (`keepNoDataBatches`): stream_watermark_late.
     *    Spark filters LATE records with the PREVIOUS batch's watermark
     *    while evicting state with the current one (SPARK-24634), and the
@@ -116,81 +161,83 @@ object StreamingJobs {
     *    them the moved slice lands one watermark behind and 60 extra
     *    rows survive). Every other replay's output is emission-complete
     *    and late-schedule-free, re-proven per key per SF by the oracle.
+    *    stream_tws_ttl REQUIRES them off: in ProcessingTime mode
+    *    TransformWithStateExec.shouldRunAnotherBatch is unconditionally
+    *    true, so noNewData never latches and processAllAvailable() would
+    *    block forever. Its expiry is enforced at the state READ layer
+    *    (an expired value reads as absent), so maintenance batches are
+    *    needed only for eager cleanup, never for the semantics.
+    *  - stateStore.providerClass = RocksDB when `rocksDbState`:
+    *    transformWithState requires the RocksDB provider — which is also
+    *    the provider a 100 TB deployment runs for larger-than-memory
+    *    state. Every other replay runs the session's provider, so a
+    *    deployment that sets spark.sql.streaming.stateStore.providerClass
+    *    gets it; results are provider-INVARIANT (SemanticsSpec replays
+    *    the mapGroupsWithState and dropDuplicates keys under both).
     */
-  private def withReplayConfs[A](spark: SparkSession,
-      keepNoDataBatches: Boolean = false)(body: => A): A = {
-    val scoped = Seq(
-      "spark.sql.shuffle.partitions" -> "8",
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
-        sys.env.getOrElse("GRAFT_STREAM_CHECKPOINT_CHECKSUM", "false"),
-      "spark.sql.streaming.noDataMicroBatches.enabled" ->
-        (if (keepNoDataBatches) "true"
-         else sys.env.getOrElse("GRAFT_STREAM_NODATA_BATCHES", "false")))
-    val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  /** GRAFT_STREAM_STATE_PROVIDER=rocksdb: run the enclosed replay's
-    * state store on RocksDB + changelog checkpointing (r16 verdict #4
-    * A/B — the HDFS-backed provider's per-batch full-snapshot commit is
-    * the stateful family's wall floor; changelog mode commits only the
-    * delta). Default (unset) preserves the long-standing HDFS provider
-    * so the A/B has a fixed control side and the oracle hashes a stable
-    * baseline. Session-scoped: set before the query starts (the stream
-    * pins the provider at its first batch), restored after — the same
-    * pattern as the partition-count scoping in [[replayFileSource]].
-    * Results must be provider-INVARIANT (the provider stores state, it
-    * does not define semantics) — StreamingStatefulSpec pins that by
-    * running a key under both providers.
-    */
-  private def withEnvStateProvider[A](spark: SparkSession)(body: => A): A = {
-    // sys.props first so the in-suite invariance test can flip the knob
-    // inside one JVM; the bench/driver surface is the env var
-    val useRocks = sys.props.get("graft.stream.stateProvider")
-      .orElse(sys.env.get("GRAFT_STREAM_STATE_PROVIDER"))
-      .exists(_.trim == "rocksdb")
-    if (!useRocks) body
-    else {
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val changelogKey =
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      val prevProvider = spark.conf.getOption(providerKey)
-      val prevChangelog = spark.conf.getOption(changelogKey)
-      def restore(key: String, prev: Option[String]): Unit = prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      spark.conf.set(providerKey,
+  private def replayConfs(keepNoDataBatches: Boolean,
+      rocksDbState: Boolean): Seq[(String, String)] =
+    Seq("spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> keepNoDataBatches.toString) ++
+      (if (rocksDbState) Seq("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(changelogKey, "true")
-      try body finally {
-        restore(providerKey, prevProvider)
-        restore(changelogKey, prevChangelog)
+       else Nil)
+
+  /** Move staged chunk `c`'s parquet files into `watch` with
+    * chunk-ordered names (c000_0, c001_0, …) AND mtime t0 + c seconds,
+    * so the file source's (mtime, path) discovery order equals event
+    * order whichever key it sorts by — the order an AvailableNow drain
+    * of a pre-loaded backlog depends on. A chunk with no rows has no
+    * staged directory and moves nothing.
+    */
+  private[graft] def moveChunk(stage: String, c: Long, watch: Path, t0: Long): Unit = {
+    val dir = Paths.get(stage, s"chunk=$c")
+    if (Files.exists(dir)) {
+      val listing = Files.list(dir)
+      val files =
+        try {
+          import scala.jdk.CollectionConverters._
+          listing.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+        } finally listing.close()
+      files.zipWithIndex.foreach { case (f, i) =>
+        val dst = watch.resolve(f"c$c%03d_$i.parquet")
+        Files.move(f, dst)
+        Files.setLastModifiedTime(dst, FileTime.fromMillis(t0 + c * 1000))
       }
     }
   }
 
-  /** events projected to the five replay columns. */
-  private def events(spark: SparkSession, sfDir: String): DataFrame =
-    T.events(spark, sfDir).select(EventCols: _*)
-
-  /** chunk-id expression: event_id is a dense time-ordered sequence
-    * (TESTDATA.md), so floor(id / per) IS the arrival order. Only the
-    * (count, maxTs) bounds row crosses to the driver.
+  /** The events in `nChunks` id-range arrival chunks: event_id is a
+    * dense time-ordered sequence (TESTDATA.md), so floor(id / per) with
+    * per = ceil(n / nChunks) IS the arrival order. Only the (count,
+    * maxTs) bounds row crosses to the driver. Returns the five replay
+    * columns, the chunk-id column and the last event time.
     */
-  private def bounds(ev: DataFrame): (Long, Timestamp) = {
+  private def idChunks(spark: SparkSession, sfDir: String,
+      nChunks: Long): (DataFrame, Column, Timestamp) = {
+    val ev = T.events(spark, sfDir).select(EventCols: _*)
     val b = ev.agg(count(lit(1)).as("n"), max(col("ts")).as("maxTs")).head()
-    (b.getLong(0), b.getTimestamp(1))
+    val per = math.max(1L, math.ceil(b.getLong(0).toDouble / nChunks).toLong)
+    (ev, floor(col("event_id") / lit(per.toDouble)).cast("long"), b.getTimestamp(1))
   }
 
-  /** terminal flush rows: far-future events that advance the watermark
-    * past every real window so Append mode emits them all. */
+  /** The events staged for a replay: each row in its [[idChunks]] chunk
+    * as rewritten by `arrival` (stream_watermark_late's late slice),
+    * followed, when `flush`, by the [[FlushChunks]] terminal flush
+    * chunks. Returns the rows and their last chunk id.
+    */
+  private def eventChunks(spark: SparkSession, sfDir: String, nChunks: Long,
+      flush: Boolean, arrival: Column => Column = identity): (DataFrame, Long) = {
+    val (ev, chunk, maxTs) = idChunks(spark, sfDir, nChunks)
+    val rows = ev.withColumn("chunk", arrival(chunk))
+    if (flush) (rows.unionByName(flushRows(spark, maxTs, nChunks, FlushChunks)),
+      nChunks + FlushChunks - 1)
+    else (rows, nChunks - 1)
+  }
+
   /** How many terminal flush CHUNKS an Append-mode watermark replay
-    * must stage while [[withReplayConfs]] disables no-data micro-batches
+    * must stage while [[replayConfs]] disables no-data micro-batches
     * (the default): the FIRST flush batch advances the watermark past
     * every real window/session/timer deadline, and the SECOND is the
     * data batch in which the engine evaluates emission/timers against
@@ -205,6 +252,8 @@ object StreamingJobs {
     */
   private[graft] val FlushChunks = 2
 
+  /** terminal flush rows: far-future events that advance the watermark
+    * past every real window so Append mode emits them all. */
   private def flushRows(spark: SparkSession, maxTs: Timestamp, firstChunk: Long,
       nFlush: Int): DataFrame = {
     import spark.implicits._
@@ -212,6 +261,36 @@ object StreamingJobs {
     (0 until nFlush).map(i =>
         (-(i + 1).toLong, flushTs, -1L, "___flush", 0.0, firstChunk + i))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "chunk")
+  }
+
+  /** foreachBatch body of every batch-keyed sink: write `shape` of the
+    * micro-batch to its own batchId-keyed subdir with overwrite, never
+    * append to a shared dir — foreachBatch is at-least-once, so a
+    * retried micro-batch must REPLACE its output instead of re-appending
+    * it (exactly-once by idempotence, the production pattern). A
+    * restarted query's ids continue from its checkpoint, so an earlier
+    * run's batches are never clobbered.
+    */
+  private def sinkBatches(outDir: String,
+      shape: DataFrame => DataFrame = identity): (DataFrame, Long) => Unit =
+    (batch, id) => shape(batch).write.mode("overwrite").parquet(s"$outDir/batch=$id")
+
+  /** Run `replay` against a fresh [[sinkBatches]] directory and return
+    * `result` of the union of its batches. The batch=<id> layout is
+    * partition-style, so the read-back is one parquet table whose
+    * `batch` column is the micro-batch id — stream_tws_ttl keeps each
+    * user's last batch by it; every other result projects it away. The
+    * result is small (aggregated or |users|-bounded) and pinned to
+    * executor blocks, so the sink directory is deleted eagerly instead
+    * of leaking one dir per run for a lazy read-back.
+    */
+  private def viaBatchSink(spark: SparkSession, tag: String)(replay: String => Unit)(
+      result: DataFrame => DataFrame): DataFrame = {
+    val outDir = Tmp.dir(tag)
+    try {
+      replay(outDir.toString)
+      result(spark.read.parquet(outDir.toString)).localCheckpoint(true)
+    } finally Tmp.quietDeleteRecursively(outDir)
   }
 
   /** sink description per replay tag — the test suite pins the
@@ -256,7 +335,7 @@ object StreamingJobs {
       stage
     } catch {
       // a failed staging write must not leak its partial output
-      case e: Throwable => quietDelete(root); throw e
+      case e: Throwable => Tmp.quietDeleteRecursively(root); throw e
     }
   }
 
@@ -283,32 +362,6 @@ object StreamingJobs {
         "and would never be fed (0-based dense event_id contract broken?)")
   }
 
-  /** feed chunks 0..maxChunk into `watch`, one deterministic
-    * micro-batch per move+processAllAvailable pair. `sleepMs` pauses
-    * BETWEEN batches (never before the first) — the processing-time gap
-    * the TTL semantics test needs to let state expire across batches. */
-  private def feedChunks(stage: String, watch: java.nio.file.Path, maxChunk: Long,
-      q: StreamingQuery, sleepMs: Long = 0L): Unit =
-    for (c <- 0L to maxChunk) {
-      if (c > 0 && sleepMs > 0) Thread.sleep(sleepMs)
-      val dir = java.nio.file.Paths.get(stage, s"chunk=$c")
-      if (Files.exists(dir)) {
-        val listing = Files.list(dir)
-        try {
-          val files = listing.iterator()
-          var i = 0
-          while (files.hasNext) {
-            val f = files.next()
-            if (f.getFileName.toString.endsWith(".parquet")) {
-              Files.move(f, watch.resolve(s"c${c}_$i.parquet"))
-              i += 1
-            }
-          }
-        } finally listing.close()
-      }
-      q.processAllAvailable()
-    }
-
   /** memory-sink drain: pin the (small, aggregated) result to executor
     * blocks and DROP the sink table. The memory sink stores its rows on
     * the DRIVER heap; nine streaming keys leaving their sinks registered
@@ -323,21 +376,6 @@ object StreamingJobs {
     out
   }
 
-  private def deleteRecursively(root: java.nio.file.Path): Unit =
-    if (root != null && Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(root)
-      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
-
-  /** scaffolding cleanup never throws: state-store maintenance can
-    * still touch a checkpoint between walk and delete, and a cleanup
-    * failure from a finally block would mask the job's real outcome. */
-  private def quietDelete(root: java.nio.file.Path): Unit =
-    try deleteRecursively(root)
-    catch { case scala.util.control.NonFatal(_) => () }
-
   /** 1-h tumbling counts with a 10-min watermark; events that arrive
     * after the watermark passed their window are DROPPED. Every 40th
     * event is shifted two chunks later to manufacture late data (a
@@ -347,27 +385,20 @@ object StreamingJobs {
     */
   def watermarkLate(spark: SparkSession, sfDir: String): DataFrame = {
     val nChunks = 4L
-    val ev = events(spark, sfDir)
-    val (n, maxTs) = bounds(ev)
-    val per = math.max(1L, math.ceil(n.toDouble / nChunks).toLong)
-    val base = floor(col("event_id") / lit(per.toDouble)).cast("long")
-    val late = when(col("event_id") % 40 === 0,
-      least(base + 2, lit(nChunks))).otherwise(base)
-    val staged = ev.withColumn("chunk", late)
-      .unionByName(flushRows(spark, maxTs, nChunks, FlushChunks))
-    replayFileSource(spark, "wm_late", staged, nChunks + 1,
-      (stream, ckpt) => stream
+    val (staged, maxChunk) = eventChunks(spark, sfDir, nChunks, flush = true,
+      arrival = base => when(col("event_id") % 40 === 0,
+        least(base + 2, lit(nChunks))).otherwise(base))
+    replayFileSource(spark, "wm_late", staged, maxChunk,
+      stream => stream
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .writeStream.format("memory").queryName("wm_late")
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .start(),
+        .outputMode(OutputMode.Append()),
       // the late-drop SCHEDULE is this key's declared semantics, and
       // Spark filters late records with the PREVIOUS batch's watermark —
       // the no-data batches between chunks are what advance it, so this
-      // one replay keeps them (see withReplayConfs)
+      // one replay keeps them (see replayConfs)
       keepNoDataBatches = true)
     drain(spark, "wm_late")
       .select(col("w.start").as("ws"), col("event_type"), col("n"))
@@ -387,25 +418,17 @@ object StreamingJobs {
     * batch join+aggregate, which is the oracle.
     */
   def streamStaticJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val nChunks = 4L
-    val ev = events(spark, sfDir)
-    val (n, maxTs) = bounds(ev)
-    val per = math.max(1L, math.ceil(n.toDouble / nChunks).toLong)
-    val staged = ev.withColumn("chunk",
-        floor(col("event_id") / lit(per.toDouble)).cast("long"))
-      .unionByName(flushRows(spark, maxTs, nChunks, FlushChunks))
+    val (staged, maxChunk) = eventChunks(spark, sfDir, 4L, flush = true)
     val dim = T.customer(spark, sfDir)
       .select(col("c_custkey").as("user_id"), col("c_nationkey").as("nation"))
-    replayFileSource(spark, "ss_join", staged, nChunks + 1, (stream, ckpt) =>
+    replayFileSource(spark, "ss_join", staged, maxChunk, stream =>
       stream
         .withWatermark("ts", "10 minutes")
         .join(broadcast(dim), Seq("user_id"))
         .groupBy(window(col("ts"), "1 hour").as("w"), col("nation"))
         .agg(count(lit(1)).as("n"))
         .writeStream.format("memory").queryName("ss_join")
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .start())
+        .outputMode(OutputMode.Append()))
     drain(spark, "ss_join")
       .select(col("w.start").as("ws"), col("nation"), col("n"))
       .orderBy("ws", "nation")
@@ -418,10 +441,7 @@ object StreamingJobs {
     */
   def dedupStateful(spark: SparkSession, sfDir: String): DataFrame = {
     val nChunks = 3L
-    val ev = events(spark, sfDir)
-    val (n, _) = bounds(ev)
-    val per = math.max(1L, math.ceil(n.toDouble / nChunks).toLong)
-    val base = floor(col("event_id") / lit(per.toDouble)).cast("long")
+    val (ev, base, _) = idChunks(spark, sfDir, nChunks)
     // duplicates: the %10 slice of chunks 0..nChunks-2, arriving one
     // chunk later (the last chunk's slice is never re-sent — the same
     // schedule the round-1/2 driver-side reinject transform produced)
@@ -429,14 +449,12 @@ object StreamingJobs {
       .withColumn("chunk", base + 1)
     val staged = ev.withColumn("chunk", base).unionByName(dups)
     replayFileSource(spark, "dedup_stream", staged, nChunks - 1,
-      (stream, ckpt) => stream
+      stream => stream
         .withWatermark("ts", "30 minutes")
         .dropDuplicatesWithinWatermark(Seq("event_id"))
         .groupBy("event_type").agg(count(lit(1)).as("n"))
         .writeStream.format("memory").queryName("dedup_stream")
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckpt)
-        .start())
+        .outputMode(OutputMode.Complete()))
     drain(spark, "dedup_stream").orderBy("event_type")
   }
 
@@ -459,52 +477,30 @@ object StreamingJobs {
     * additive across batches because Append-mode inner joins emit each
     * match exactly once.
     */
-  def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val outDir = Tmp.dir("ss_join_out").toString
-    try {
-      val nChunks = 2L
-      val ev = events(spark, sfDir)
-      val (n, _) = bounds(ev)
-      val per = math.max(1L, math.ceil(n.toDouble / nChunks).toLong)
-      val staged = ev.withColumn("chunk",
-        floor(col("event_id") / lit(per.toDouble)).cast("long"))
-      replayFileSource(spark, "ss_join", staged, nChunks - 1,
-        (stream, ckpt) => {
-          val clicks = stream.filter(col("event_type") === "click")
-            .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-            .withWatermark("c_ts", "30 minutes")
-          val buys = stream.filter(col("event_type") === "purchase")
-            .select(col("user_id").as("p_user"), col("event_id").as("p_id"), col("ts").as("p_ts"))
-            .withWatermark("p_ts", "30 minutes")
-          buys.join(clicks,
-            col("p_user") === col("c_user") &&
-              col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-              col("c_ts") < col("p_ts"))
-            .writeStream
-            .outputMode(OutputMode.Append())
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (batch: DataFrame, id: Long) =>
-              // overwrite a batchId-keyed subdir, not append to a shared
-              // dir: foreachBatch is at-least-once, so a retried
-              // micro-batch must REPLACE its partials, never re-append
-              // them (double-counted n_pairs). The batch=<id> layout is
-              // partition-style, so the read-back discovers it as one
-              // parquet table.
-              batch.groupBy("p_user").agg(count(lit(1)).as("np"))
-                .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-            }
-            .start()
-        })
-      // per-batch partials are |users|-bounded — pin the summed result
-      // to executor blocks so the scratch dir can be deleted eagerly
-      spark.read.parquet(outDir)
-        .drop("batch") // sink-layout partition col — never a payload
-        .groupBy(col("p_user").as("user_id"))
+  def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame =
+    viaBatchSink(spark, "ss_join_out") { outDir =>
+      val (staged, maxChunk) = eventChunks(spark, sfDir, 2L, flush = false)
+      replayFileSource(spark, "ss_join", staged, maxChunk, stream => {
+        val clicks = stream.filter(col("event_type") === "click")
+          .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+          .withWatermark("c_ts", "30 minutes")
+        val buys = stream.filter(col("event_type") === "purchase")
+          .select(col("user_id").as("p_user"), col("event_id").as("p_id"), col("ts").as("p_ts"))
+          .withWatermark("p_ts", "30 minutes")
+        buys.join(clicks,
+          col("p_user") === col("c_user") &&
+            col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
+            col("c_ts") < col("p_ts"))
+          .writeStream
+          .outputMode(OutputMode.Append())
+          .foreachBatch(sinkBatches(outDir,
+            _.groupBy("p_user").agg(count(lit(1)).as("np"))))
+      })
+    } {
+      _.groupBy(col("p_user").as("user_id"))
         .agg(sum("np").as("n_pairs"))
         .orderBy("user_id")
-        .localCheckpoint(true)
-    } finally quietDelete(java.nio.file.Paths.get(outDir))
-  }
+    }
 
   case class TypeAgg(event_type: String, n: Long, sv: Double)
   // `value` is 2-dp money stored as doubles; the state accumulates EXACT
@@ -547,52 +543,27 @@ object StreamingJobs {
   /** running per-type aggregates via the transformWithState API; the
     * final per-type row (max count) is the steady state.
     */
-  /** transformWithState requires the RocksDB state store provider —
-    * which is also the provider a 100 TB deployment runs for
-    * larger-than-memory state. Scoped to the body, then restored.
-    */
-  private def withRocksDbState[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   def transformWithStateAgg(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    withRocksDbState(spark) {
-      val nChunks = 2L
-      val ev = events(spark, sfDir)
-      val (n, _) = bounds(ev)
-      val per = math.max(1L, math.ceil(n.toDouble / nChunks).toLong)
-      val staged = ev.withColumn("chunk",
-        floor(col("event_id") / lit(per.toDouble)).cast("long"))
-      replayFileSource(spark, "tws_agg", staged, nChunks - 1,
-        (stream, ckpt) => stream.as[Event]
-          .groupByKey(_.event_type)
-          .transformWithState(new TypeAggProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update())
-          .toDF()
-          .writeStream.format("memory").queryName("tws_agg")
-          .outputMode(OutputMode.Update())
-          .option("checkpointLocation", ckpt)
-          .start())
-      // final state per type = the update with the largest count
-      // (counts are strictly monotone per update)
-      drain(spark, "tws_agg")
-        .groupBy("event_type")
-        .agg(max(struct(col("n"), col("sv"))).as("m"))
-        .select(col("event_type"), col("m.n").as("n"),
-          round(col("m.sv"), 2).as("sv"))
-        .orderBy("event_type")
-    }
+    val (staged, maxChunk) = eventChunks(spark, sfDir, 2L, flush = false)
+    replayFileSource(spark, "tws_agg", staged, maxChunk,
+      stream => stream.as[Event]
+        .groupByKey(_.event_type)
+        .transformWithState(new TypeAggProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update())
+        .toDF()
+        .writeStream.format("memory").queryName("tws_agg")
+        .outputMode(OutputMode.Update()),
+      rocksDbState = true)
+    // final state per type = the update with the largest count
+    // (counts are strictly monotone per update)
+    drain(spark, "tws_agg")
+      .groupBy("event_type")
+      .agg(max(struct(col("n"), col("sv"))).as("m"))
+      .select(col("event_type"), col("m.n").as("n"),
+        round(col("m.sv"), 2).as("sv"))
+      .orderBy("event_type")
   }
 
   case class UserLast3(user_id: Long, n_seen: Long,
@@ -647,36 +618,28 @@ object StreamingJobs {
 
   def transformWithStateList(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    withRocksDbState(spark) {
-      val nChunks = 2L
-      val ev = events(spark, sfDir)
-      val (n, _) = bounds(ev)
-      val per = math.max(1L, math.ceil(n.toDouble / nChunks).toLong)
-      val staged = ev.withColumn("chunk",
-        floor(col("event_id") / lit(per.toDouble)).cast("long"))
-      replayFileSource(spark, "tws_list", staged, nChunks - 1,
-        (stream, ckpt) => stream.as[Event]
-          .groupByKey(_.user_id)
-          .transformWithState(new UserLast3Processor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update())
-          .toDF()
-          .writeStream.format("memory").queryName("tws_list")
-          .outputMode(OutputMode.Update())
-          .option("checkpointLocation", ckpt)
-          .start())
-      // n_seen is strictly monotone per user → the final buffer is the
-      // update with the largest n_seen
-      drain(spark, "tws_list")
-        .groupBy("user_id")
-        .agg(max(struct(col("n_seen"), col("id1"), col("v1"),
-          col("id2"), col("v2"), col("id3"), col("v3"))).as("m"))
-        .select(col("user_id"), col("m.n_seen").as("n_seen"),
-          col("m.id1").as("id1"), col("m.v1").as("v1"),
-          col("m.id2").as("id2"), col("m.v2").as("v2"),
-          col("m.id3").as("id3"), col("m.v3").as("v3"))
-        .orderBy("user_id")
-    }
+    val (staged, maxChunk) = eventChunks(spark, sfDir, 2L, flush = false)
+    replayFileSource(spark, "tws_list", staged, maxChunk,
+      stream => stream.as[Event]
+        .groupByKey(_.user_id)
+        .transformWithState(new UserLast3Processor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update())
+        .toDF()
+        .writeStream.format("memory").queryName("tws_list")
+        .outputMode(OutputMode.Update()),
+      rocksDbState = true)
+    // n_seen is strictly monotone per user → the final buffer is the
+    // update with the largest n_seen
+    drain(spark, "tws_list")
+      .groupBy("user_id")
+      .agg(max(struct(col("n_seen"), col("id1"), col("v1"),
+        col("id2"), col("v2"), col("id3"), col("v3"))).as("m"))
+      .select(col("user_id"), col("m.n_seen").as("n_seen"),
+        col("m.id1").as("id1"), col("m.v1").as("v1"),
+        col("m.id2").as("id2"), col("m.v2").as("v2"),
+        col("m.id3").as("id3"), col("m.v3").as("v3"))
+      .orderBy("user_id")
   }
 
   case class TtlCount(user_id: Long, n: Long)
@@ -717,31 +680,16 @@ object StreamingJobs {
     * SemanticsSpec hook). Final value per user = its row in the LAST
     * batch that touched it (max batch id) — with expiry, counts are NOT
     * monotone, so statefulCount's max-n drain would resurrect
-    * pre-expiry state.
+    * pre-expiry state. ProcessingTime mode needs the replay's default
+    * of no no-data micro-batches (see [[replayConfs]]).
     */
   private[graft] def twsTtlCounts(spark: SparkSession, sfDir: String,
       ttlMs: Long, sleepMs: Long): DataFrame = {
     import spark.implicits._
-    val outDir = Tmp.dir("tws_ttl_out").toString
-    // In ProcessingTime mode TransformWithStateExec.shouldRunAnotherBatch
-    // is unconditionally true (the engine wants no-data batches to
-    // advance time for TTL/timer maintenance) — so noNewData never
-    // latches and processAllAvailable() blocks FOREVER. Disable no-data
-    // micro-batches for this replay: expiry is enforced at the state
-    // READ layer (an expired value reads as absent), so maintenance
-    // batches aren't needed for the semantics, only for eager cleanup.
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndPrev = spark.conf.getOption(ndKey)
-    spark.conf.set(ndKey, "false")
-    try withRocksDbState(spark) {
-      val nChunks = 2L
-      val ev = events(spark, sfDir)
-      val (n, _) = bounds(ev)
-      val per = math.max(1L, math.ceil(n.toDouble / nChunks).toLong)
-      val staged = ev.withColumn("chunk",
-        floor(col("event_id") / lit(per.toDouble)).cast("long"))
-      replayFileSource(spark, "tws_ttl", staged, nChunks - 1,
-        (stream, ckpt) => stream.as[Event]
+    viaBatchSink(spark, "tws_ttl_out") { outDir =>
+      val (staged, maxChunk) = eventChunks(spark, sfDir, 2L, flush = false)
+      replayFileSource(spark, "tws_ttl", staged, maxChunk,
+        stream => stream.as[Event]
           .groupByKey(_.user_id)
           .transformWithState(new TtlCountProcessor(ttlMs),
             org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
@@ -749,23 +697,12 @@ object StreamingJobs {
           .toDF()
           .writeStream
           .outputMode(OutputMode.Update())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            batch.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start(),
-        interBatchSleepMs = sleepMs)
-      spark.read.parquet(outDir)
-        .groupBy("user_id")
+          .foreachBatch(sinkBatches(outDir)),
+        PerChunk(sleepMs), rocksDbState = true)
+    } {
+      _.groupBy("user_id")
         .agg(max(struct(col("batch"), col("n"))).as("m"))
         .select(col("user_id"), col("m.n").as("n"))
-        .localCheckpoint(true)
-    } finally {
-      ndPrev match {
-        case Some(v) => spark.conf.set(ndKey, v)
-        case None => spark.conf.unset(ndKey)
-      }
-      quietDelete(java.nio.file.Paths.get(outDir))
     }
   }
 
@@ -886,32 +823,21 @@ object StreamingJobs {
     * the day gap yields real multi-event sessions; a web-scale 30-min
     * gap would make every event its own session here) via
     * transformWithState + event-time timers under RocksDB. The
-    * terminal flush chunk pushes the watermark a week past the data so
+    * terminal flush chunks push the watermark a week past the data so
     * every open session's timer fires and the output is the COMPLETE
     * session table — which equals batch gaps-islands sessionization,
-    * the DuckDB oracle. Sink = batchId-keyed scratch parquet
+    * the DuckDB oracle. The second flush chunk is the DATA batch in
+    * which the engine evaluates timers against the advanced watermark
+    * (see [[FlushChunks]]); the flush user's own session still never
+    * closes and is filtered below. Sink = batchId-keyed scratch parquet
     * (idempotent overwrite), driver never holds rows.
     */
   def twsSessionize(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val outDir = Tmp.dir("tws_sess_out").toString
-    try withRocksDbState(spark) {
-      val nChunks = 3L
-      val ev = events(spark, sfDir)
-      val (n, maxTs) = bounds(ev)
-      val per = math.max(1L, math.ceil(n.toDouble / nChunks).toLong)
-      // TWO flush chunks (r17, no-data batches disabled in the replay):
-      // the first advances the watermark past every real session's gap
-      // end, the second is the DATA batch in which the engine evaluates
-      // timers against that advanced watermark — the emission the
-      // trailing no-data batch used to perform. Same sessions, same
-      // rows (the oracle re-proves it); the flush user's own session
-      // still never closes and is filtered below.
-      val staged = ev.withColumn("chunk",
-          floor(col("event_id") / lit(per.toDouble)).cast("long"))
-        .unionByName(flushRows(spark, maxTs, nChunks, FlushChunks))
-      replayFileSource(spark, "tws_sess", staged, nChunks + 1,
-        (stream, ckpt) => stream
+    viaBatchSink(spark, "tws_sess_out") { outDir =>
+      val (staged, maxChunk) = eventChunks(spark, sfDir, 3L, flush = true)
+      replayFileSource(spark, "tws_sess", staged, maxChunk,
+        stream => stream
           .withWatermark("ts", "10 minutes")
           .as[Event]
           .groupByKey(_.user_id)
@@ -921,158 +847,63 @@ object StreamingJobs {
           .toDF()
           .writeStream
           .outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: DataFrame, id: Long) =>
-            df.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start())
-      spark.read.parquet(outDir)
-        .drop("batch") // sink-layout partition col — never a payload
-        .filter(col("user_id") >= 0) // the ___flush row's session never closes
+          .foreachBatch(sinkBatches(outDir)),
+        rocksDbState = true)
+    } {
+      _.filter(col("user_id") >= 0) // the ___flush row's session never closes
         .select("user_id", "session_start", "session_end", "n_events")
         .orderBy("user_id", "session_start")
-        .localCheckpoint(true)
-    } finally quietDelete(java.nio.file.Paths.get(outDir))
+    }
   }
 
-  /** streaming → EXTERNAL sink through foreachBatch: the watermarked
-    * 1-h tumbling aggregate emitted per micro-batch into an append-only
-    * parquet directory, then read back. Append mode emits each window
-    * exactly once (when the watermark finalizes it), so the sink's
-    * union-of-batches equals the batch aggregate — which is the oracle.
-    * foreachBatch is at-least-once, so the sink writes each micro-batch
-    * to its own batchId-keyed subdir with overwrite — a retried batch
-    * replaces its output instead of re-appending it (exactly-once by
-    * idempotence, the production pattern). The in-order replay plus a
-    * terminal flush event (advances the watermark past every real
-    * window) guarantees nothing is dropped and nothing is left
-    * unemitted.
+  /** The watermarked 1-h tumbling counts per event_type into a
+    * batch-keyed sink, replayed from `nChunks` in-order id-range chunks
+    * plus the [[FlushChunks]] flush chunks (they advance the watermark
+    * past every real window, so nothing is left unemitted) and fed as
+    * `feed(lastChunk)` says. Append mode emits each window exactly once,
+    * when the watermark finalizes it, so the sink's union-of-batches
+    * equals the batch tumbling aggregate — the one oracle of
+    * stream_foreachbatch_sink, stream_available_now and
+    * stream_restart_recovery, which differ only in how the chunks
+    * arrive.
     */
-  def foreachBatchSink(spark: SparkSession, sfDir: String): DataFrame = {
-    val outDir = Tmp.dir("fb_sink").toString
-    try {
-      // in-order replay (no lateness here): id-range chunks, then TWO
-      // terminal flush chunks (r17, no-data batches disabled in the
-      // replay): the first advances the watermark past every real
-      // window, the second is the data batch that emits the windows the
-      // trailing no-data batch used to — union-of-batches unchanged.
-      val nChunks = 2L
-      val ev = events(spark, sfDir)
-      val (n, maxTs) = bounds(ev)
-      val per = math.max(1L, math.ceil(n.toDouble / nChunks).toLong)
-      val staged = ev.withColumn("chunk",
-          floor(col("event_id") / lit(per.toDouble)).cast("long"))
-        .unionByName(flushRows(spark, maxTs, nChunks, FlushChunks))
-      replayFileSource(spark, "fb", staged, nChunks + 1,
-        (stream, ckpt) => stream
+  private def tumblingCountReplay(spark: SparkSession, sfDir: String, tag: String,
+      nChunks: Long, feed: Long => Feed): DataFrame =
+    viaBatchSink(spark, s"${tag}_sink") { outDir =>
+      val (staged, maxChunk) = eventChunks(spark, sfDir, nChunks, flush = true)
+      replayFileSource(spark, tag, staged, maxChunk,
+        stream => stream
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(col("w.start").as("ws"), col("event_type"), col("n"))
           .writeStream
           .outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: DataFrame, id: Long) =>
-            df.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start())
-      // the window aggregate is tiny — pin it to executor blocks so the
-      // external sink directory can be deleted with the scaffolding
-      // instead of leaking one dir per run for a lazy read-back
-      spark.read.parquet(outDir)
-        .drop("batch") // sink-layout partition col — never a payload
-        .filter(col("event_type") =!= "___flush")
+          .foreachBatch(sinkBatches(outDir)),
+        feed(maxChunk))
+    } {
+      _.filter(col("event_type") =!= "___flush")
         .select("ws", "event_type", "n")
         .orderBy("ws", "event_type")
-        .localCheckpoint(true)
-    } finally quietDelete(java.nio.file.Paths.get(outDir))
-  }
+    }
+
+  /** streaming → EXTERNAL sink through foreachBatch: the tumbling
+    * aggregate emitted per micro-batch into batchId-keyed parquet, then
+    * read back — one long-lived query, one micro-batch per chunk.
+    */
+  def foreachBatchSink(spark: SparkSession, sfDir: String): DataFrame =
+    tumblingCountReplay(spark, sfDir, "fb", 2L, _ => PerChunk())
 
   /** the production "drain the backlog" mode: every staged chunk file
     * sits in the watched dir UP FRONT, and one Trigger.AvailableNow run
-    * with maxFilesPerTrigger = 1 drains them as bounded micro-batches,
-    * then self-terminates — the pattern a periodic (cron-style) ingest
-    * job runs instead of an always-on stream. Append-mode watermark
-    * parity needs event-time-ordered discovery: stageChunks lands each
-    * id-range chunk in exactly ONE file (repartition by chunk), and the
-    * files are moved in with chunk-ordered names AND strictly increasing
-    * mtimes, so the source's (mtime, path) discovery order equals event
-    * order whichever key it sorts by; the terminal flush chunk advances
-    * the watermark past every real window. Result = the batch tumbling
-    * aggregate — the same oracle as stream_foreachbatch_sink.
+    * drains them as bounded micro-batches, then self-terminates.
+    * Append-mode watermark parity needs event-time-ordered discovery:
+    * stageChunks lands each id-range chunk in exactly ONE file, and
+    * [[moveChunk]] gives the files chunk-ordered names and mtimes.
+    * Result = the same oracle as stream_foreachbatch_sink.
     */
-  def availableNowDrain(spark: SparkSession, sfDir: String): DataFrame = {
-    val outDir = Tmp.dir("an_sink").toString
-    try {
-      val nChunks = 2L
-      val ev = events(spark, sfDir)
-      val (n, maxTs) = bounds(ev)
-      val per = math.max(1L, math.ceil(n.toDouble / nChunks).toLong)
-      // two flush chunks (r17): see [[withReplayConfs]] — the second is
-      // the data batch that emits the last real window once no-data
-      // batches are off
-      val staged = ev.withColumn("chunk",
-          floor(col("event_id") / lit(per.toDouble)).cast("long"))
-        .unionByName(flushRows(spark, maxTs, nChunks, FlushChunks))
-      val maxChunk = nChunks + 1
-      val watch = Tmp.dir("an_watch")
-      val ckpt = Tmp.dir("an_ckpt").toString
-      var stage: String = null
-      try withReplayConfs(spark) { withEnvStateProvider(spark) {
-        stage = stageChunks(staged, "an", maxChunk)
-        assertStagedWithin(stage, maxChunk)
-        // pre-load the full backlog, discovery-ordered by chunk
-        val t0 = System.currentTimeMillis()
-        for (c <- 0L to maxChunk) {
-          val dir = java.nio.file.Paths.get(stage, s"chunk=$c")
-          if (Files.exists(dir)) {
-            val listing = Files.list(dir)
-            try {
-              val files = listing.iterator()
-              var i = 0
-              while (files.hasNext) {
-                val f = files.next()
-                if (f.getFileName.toString.endsWith(".parquet")) {
-                  val dst = watch.resolve(f"c$c%03d_$i.parquet")
-                  Files.move(f, dst)
-                  Files.setLastModifiedTime(dst,
-                    java.nio.file.attribute.FileTime.fromMillis(t0 + c * 1000))
-                  i += 1
-                }
-              }
-            } finally listing.close()
-          }
-        }
-        val schema = org.apache.spark.sql.types.StructType(
-          staged.schema.filterNot(_.name == "chunk"))
-        val q = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(watch.toString)
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(col("w.start").as("ws"), col("event_type"), col("n"))
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (df: DataFrame, id: Long) =>
-            df.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start()
-        q.awaitTermination() // AvailableNow self-terminates when drained
-      } } finally {
-        Seq(Option(stage).map(java.nio.file.Paths.get(_).getParent).orNull,
-          watch, java.nio.file.Paths.get(ckpt)).foreach(quietDelete)
-      }
-      spark.read.parquet(outDir)
-        .drop("batch") // sink-layout partition col — never a payload
-        .filter(col("event_type") =!= "___flush")
-        .select("ws", "event_type", "n")
-        .orderBy("ws", "event_type")
-        .localCheckpoint(true)
-    } finally quietDelete(java.nio.file.Paths.get(outDir))
-  }
+  def availableNowDrain(spark: SparkSession, sfDir: String): DataFrame =
+    tumblingCountReplay(spark, sfDir, "an", 2L, last => AvailableNow(Seq(last)))
 
   case class UserState(n: Long, lastSeenUs: Long)
   case class UserCount(user_id: Long, n: Long, last_seen_us: Long)
@@ -1093,16 +924,10 @@ object StreamingJobs {
     */
   def statefulCount(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val outDir = Tmp.dir("user_state_out").toString
-    try {
-      val nChunks = 2L
-      val ev = events(spark, sfDir)
-      val (n, _) = bounds(ev)
-      val per = math.max(1L, math.ceil(n.toDouble / nChunks).toLong)
-      val staged = ev.withColumn("chunk",
-        floor(col("event_id") / lit(per.toDouble)).cast("long"))
-      replayFileSource(spark, "user_state", staged, nChunks - 1,
-        (stream, ckpt) => stream.as[Event]
+    viaBatchSink(spark, "user_state_out") { outDir =>
+      val (staged, maxChunk) = eventChunks(spark, sfDir, 2L, flush = false)
+      replayFileSource(spark, "user_state", staged, maxChunk,
+        stream => stream.as[Event]
           .groupByKey(_.user_id)
           .mapGroupsWithState[UserState, UserCount](GroupStateTimeout.NoTimeout()) {
             (user: Long, evs: Iterator[Event], state: GroupState[UserState]) =>
@@ -1119,36 +944,64 @@ object StreamingJobs {
           }.toDF()
           .writeStream
           .outputMode(OutputMode.Update())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            batch.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start())
-      spark.read.parquet(outDir)
-        .drop("batch") // sink-layout partition col — never a payload
-        .groupBy("user_id")
+          .foreachBatch(sinkBatches(outDir)))
+    } {
+      _.groupBy("user_id")
         .agg(max("n").as("n"), max("last_seen_us").as("last_seen_us"))
         .orderBy("user_id")
-        .localCheckpoint(true)
-    } finally quietDelete(java.nio.file.Paths.get(outDir))
+    }
   }
 
-  /** checkpoint recovery / exactly-once across a restart: the SAME
-    * tumbling aggregate as availableNowDrain, drained by TWO
-    * Trigger.AvailableNow queries sharing ONE checkpoint with a
-    * simulated crash (query termination + fresh query object) between
-    * them. Run 1 sees only the first half of the backlog — its
-    * watermark has not passed any open window, so the windows it
-    * STARTED live only in checkpointed state; run 2's source resumes
-    * from the checkpoint's file log (only NEW files are read — a
-    * re-read would double-count), restores the aggregation state
-    * (dropped state would under-count every straddling window), and
-    * the terminal flush emits every window exactly once. The result
-    * equals the batch tumbling aggregate, so both failure modes break
-    * the hash oracle. This is the production contract a periodic
-    * ingest job actually relies on: crash anywhere, restart with the
-    * same checkpoint dir, converge to the same answer.
-    */
+  /** the incoming slice of `documents`, chunked for the 2-micro-batch
+    * replay; shared by the bench key and IngestRestartSpec. */
+  private[graft] def ingestIncoming(spark: SparkSession, sfDir: String): DataFrame =
+    T.documents(spark, sfDir)
+      .filter(col("doc_id") % 5 >= 3)
+      .select(col("doc_id"), col("text"),
+        (col("doc_id") % 5 - 3).cast("long").as("chunk"))
+
+  /** the ingest-dedup streaming plan as a stream => writer function for
+    * replayFileSource: loads the persisted index ONCE (building it if
+    * absent). Extracted so IngestRestartSpec can run the SAME plan
+    * across a kill + resume on one checkpoint — the production restart
+    * contract composed with the persisted-index serving path (r14
+    * verdict #7). */
+  private[graft] def ingestDedupQuery(spark: SparkSession, sfDir: String,
+      outDir: String): DataFrame => DataStreamWriter[Row] = {
+    import graft.ops.{MinHashLSH, TextOps}
+    val root = minhashIndexRoot(sfDir)
+    buildMinhashIndexIfAbsent(spark, sfDir, root)
+    val idxBands = spark.read.parquet(s"$root/bands.parquet")
+      .select(col("doc_id").as("a"), col("band"), col("key"))
+    val sets = spark.read.parquet(s"$root/shingles.parquet")
+      .select(col("doc_id").as("a"), col("sh").as("sha"))
+    stream => {
+      val sig = stream
+        .select(col("doc_id").as("b"), array_distinct(
+          TextOps.shingles(TextOps.tokens(col("text")), 3)).as("shb"))
+        .filter(size(col("shb")) > 0)
+        .withColumn("hashes", transform(col("shb"), TextOps.md5Long(_)))
+        .withColumn("sig", MinHashLSH.signature(col("hashes"), 16))
+      val probeBands =
+        MinHashLSH.bandKeys(sig, "b", "sig", 16, 2, carry = Seq("shb"))
+      probeBands.join(idxBands, Seq("band", "key"))
+        .select("a", "b", "shb")
+        .writeStream
+        .outputMode(OutputMode.Append())
+        // band-key multiplicity collapsed per batch (each incoming doc
+        // arrives in exactly ONE chunk, so cross-batch pairs cannot
+        // repeat); exact Jaccard against the persisted shingle sets
+        // removes banding false positives
+        .foreachBatch(sinkBatches(outDir, _.dropDuplicates("a", "b")
+          .join(sets, "a")
+          .withColumn("j", round(
+            size(array_intersect(col("sha"), col("shb"))).cast("double") /
+              size(array_union(col("sha"), col("shb"))), 4))
+          .filter(col("j") >= 0.5)
+          .select("a", "b", "j")))
+    }
+  }
+
   /** ingest-time near-dup screening against a PERSISTED MinHash index
     * (r13 verdict #7a — the incremental-corpus shape). The already-
     * ingested corpus (doc_id % 5 < 3, ~60 %) has its LSH band table and
@@ -1173,74 +1026,14 @@ object StreamingJobs {
     * hashes, same fixed permutations as dedup_minhash_lsh, so the
     * DuckDB oracle replays corpus-side and stream-side banding exactly.
     */
-  /** the incoming slice of `documents`, chunked for the 2-micro-batch
-    * replay; shared by the bench key and IngestRestartSpec. */
-  private[graft] def ingestIncoming(spark: SparkSession, sfDir: String): DataFrame =
-    T.documents(spark, sfDir)
-      .filter(col("doc_id") % 5 >= 3)
-      .select(col("doc_id"), col("text"),
-        (col("doc_id") % 5 - 3).cast("long").as("chunk"))
-
-  /** the ingest-dedup streaming plan as a (stream, ckpt) => query
-    * starter: loads the persisted index ONCE (building it if absent)
-    * and returns the function replayFileSource drives. Extracted so
-    * IngestRestartSpec can run the SAME plan across a kill + resume on
-    * one checkpoint — the production restart contract composed with
-    * the persisted-index serving path (r14 verdict #7). */
-  private[graft] def ingestDedupStarter(spark: SparkSession, sfDir: String,
-      outDir: String): (DataFrame, String) => StreamingQuery = {
-    import graft.ops.{MinHashLSH, TextOps}
-    val root = minhashIndexRoot(sfDir)
-    buildMinhashIndexIfAbsent(spark, sfDir, root)
-    val idxBands = spark.read.parquet(s"$root/bands.parquet")
-      .select(col("doc_id").as("a"), col("band"), col("key"))
-    val sets = spark.read.parquet(s"$root/shingles.parquet")
-      .select(col("doc_id").as("a"), col("sh").as("sha"))
-    (stream, ckpt) => {
-      val sig = stream
-        .select(col("doc_id").as("b"), array_distinct(
-          TextOps.shingles(TextOps.tokens(col("text")), 3)).as("shb"))
-        .filter(size(col("shb")) > 0)
-        .withColumn("hashes", transform(col("shb"), TextOps.md5Long(_)))
-        .withColumn("sig", MinHashLSH.signature(col("hashes"), 16))
-      val probeBands =
-        MinHashLSH.bandKeys(sig, "b", "sig", 16, 2, carry = Seq("shb"))
-      probeBands.join(idxBands, Seq("band", "key"))
-        .select("a", "b", "shb")
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // band-key multiplicity collapsed per batch (each incoming
-          // doc arrives in exactly ONE chunk, so cross-batch pairs
-          // cannot repeat); exact Jaccard against the persisted
-          // shingle sets removes banding false positives
-          batch.dropDuplicates("a", "b")
-            .join(sets, "a")
-            .withColumn("j", round(
-              size(array_intersect(col("sha"), col("shb"))).cast("double") /
-                size(array_union(col("sha"), col("shb"))), 4))
-            .filter(col("j") >= 0.5)
-            .select("a", "b", "j")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        .start()
-    }
-  }
-
-  def ingestDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val outDir = Tmp.dir("ingest_dedup_out").toString
-    try {
+  def ingestDedup(spark: SparkSession, sfDir: String): DataFrame =
+    viaBatchSink(spark, "ingest_dedup_out") { outDir =>
       replayFileSource(spark, "ingest_dedup",
         ingestIncoming(spark, sfDir), 1L,
-        ingestDedupStarter(spark, sfDir, outDir))
-      spark.read.parquet(outDir)
-        .drop("batch") // sink-layout partition col — never a payload
-        .select("a", "b", "j")
-        .orderBy("a", "b")
-        .localCheckpoint(true)
-    } finally quietDelete(java.nio.file.Paths.get(outDir))
-  }
+        ingestDedupQuery(spark, sfDir, outDir))
+    } {
+      _.select("a", "b", "j").orderBy("a", "b")
+    }
 
   /** stable per-SF MinHash index root — cross-session reuse is the
     * semantics under test (see the ANN index root in SimQueries). */
@@ -1280,91 +1073,22 @@ object StreamingJobs {
     }
   }
 
-  def restartRecovery(spark: SparkSession, sfDir: String): DataFrame = {
-    val outDir = Tmp.dir("rr_sink").toString
-    try {
-      val nChunks = 4L // real chunks 0..3; flush sentinels = chunks 4,5
-      val ev = events(spark, sfDir)
-      val (n, maxTs) = bounds(ev)
-      val per = math.max(1L, math.ceil(n.toDouble / nChunks).toLong)
-      // two flush chunks (r17): see [[withReplayConfs]] — the second is
-      // the data batch that emits the last real window once no-data
-      // batches are off
-      val staged = ev.withColumn("chunk",
-          floor(col("event_id") / lit(per.toDouble)).cast("long"))
-        .unionByName(flushRows(spark, maxTs, nChunks, FlushChunks))
-      val maxChunk = nChunks + 1
-      val watch = Tmp.dir("rr_watch")
-      val ckpt = Tmp.dir("rr_ckpt").toString
-      var stage: String = null
-      // move the staged chunk files into the watched dir with
-      // chunk-ordered names AND strictly increasing mtimes so the file
-      // source's (mtime, path) discovery order equals event order —
-      // the same contract availableNowDrain documents.
-      def moveIn(range: Seq[Long], t0: Long): Unit = range.foreach { c =>
-        val dir = java.nio.file.Paths.get(stage, s"chunk=$c")
-        if (Files.exists(dir)) {
-          val listing = Files.list(dir)
-          try {
-            val files = listing.iterator()
-            var i = 0
-            while (files.hasNext) {
-              val f = files.next()
-              if (f.getFileName.toString.endsWith(".parquet")) {
-                val dst = watch.resolve(f"c$c%03d_$i.parquet")
-                Files.move(f, dst)
-                Files.setLastModifiedTime(dst,
-                  java.nio.file.attribute.FileTime.fromMillis(t0 + c * 1000))
-                i += 1
-              }
-            }
-          } finally listing.close()
-        }
-      }
-      // one bounded AvailableNow drain against the SHARED checkpoint;
-      // each call builds a fresh query object — the second is the
-      // restarted process recovering source offsets + operator state.
-      def drainOnce(): Unit = {
-        val schema = org.apache.spark.sql.types.StructType(
-          staged.schema.filterNot(_.name == "chunk"))
-        val q = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(watch.toString)
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(col("w.start").as("ws"), col("event_type"), col("n"))
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (df: DataFrame, id: Long) =>
-            // batchId-keyed overwrite — idempotent under retries, and
-            // run 2's ids continue from the checkpoint so run 1's
-            // batches are never clobbered
-            df.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          }
-          .start()
-        q.awaitTermination() // AvailableNow self-terminates when drained
-      }
-      try withReplayConfs(spark) { withEnvStateProvider(spark) {
-        stage = stageChunks(staged, "rr", maxChunk)
-        assertStagedWithin(stage, maxChunk)
-        val t0 = System.currentTimeMillis()
-        moveIn(0L to 1L, t0)
-        drainOnce() // "crash": terminates with half the backlog unseen
-        moveIn(2L to maxChunk, t0)
-        drainOnce() // recovery from the same checkpoint
-      } } finally {
-        Seq(Option(stage).map(java.nio.file.Paths.get(_).getParent).orNull,
-          watch, java.nio.file.Paths.get(ckpt)).foreach(quietDelete)
-      }
-      spark.read.parquet(outDir)
-        .drop("batch") // sink-layout partition col — never a payload
-        .filter(col("event_type") =!= "___flush")
-        .select("ws", "event_type", "n")
-        .orderBy("ws", "event_type")
-        .localCheckpoint(true)
-    } finally quietDelete(java.nio.file.Paths.get(outDir))
-  }
+  /** checkpoint recovery / exactly-once across a restart: the SAME
+    * tumbling aggregate as availableNowDrain, drained by TWO
+    * Trigger.AvailableNow queries sharing ONE checkpoint with a
+    * simulated crash (query termination + fresh query object) between
+    * them. Run 1 sees only chunks 0–1 of the backlog — its watermark
+    * has not passed any open window, so the windows it STARTED live
+    * only in checkpointed state; run 2's source resumes from the
+    * checkpoint's file log (only NEW files are read — a re-read would
+    * double-count), restores the aggregation state (dropped state would
+    * under-count every straddling window), and the terminal flush emits
+    * every window exactly once. The result equals the batch tumbling
+    * aggregate, so both failure modes break the hash oracle. This is
+    * the production contract a periodic ingest job actually relies on:
+    * crash anywhere, restart with the same checkpoint dir, converge to
+    * the same answer.
+    */
+  def restartRecovery(spark: SparkSession, sfDir: String): DataFrame =
+    tumblingCountReplay(spark, sfDir, "rr", 4L, last => AvailableNow(Seq(1L, last)))
 }

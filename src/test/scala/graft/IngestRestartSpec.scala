@@ -29,34 +29,24 @@ class IngestRestartSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(
       incoming.schema.filterNot(_.name == "chunk"))
 
-    def feed(chunk: Long): Unit = {
-      val dir = Paths.get(stage, s"chunk=$chunk")
-      val listing = Files.list(dir)
-      try {
-        val it = listing.iterator()
-        var i = 0
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getFileName.toString.endsWith(".parquet")) {
-            Files.move(f, watch.resolve(s"c${chunk}_$i.parquet")); i += 1
-          }
-        }
-      } finally listing.close()
-    }
+    val t0 = System.currentTimeMillis()
+    def feed(chunk: Long): Unit = StreamingJobs.moveChunk(stage, chunk, watch, t0)
 
     // run 1: first micro-batch only, then the "crash" (query stopped,
     // object discarded — only the checkpoint survives)
-    val mk = StreamingJobs.ingestDedupStarter(spark, sf, outDir)
+    val mk = StreamingJobs.ingestDedupQuery(spark, sf, outDir)
+    def start() = mk(spark.readStream.schema(schema).parquet(watch.toString))
+      .option("checkpointLocation", ckpt).start()
     val marker = Paths.get(sys.env.getOrElse("GRAFT_MINHASH_INDEX_ROOT",
       "/tmp/graft_minhash_index"), Paths.get(sf).getFileName.toString, "_INDEX")
     val markerMtime = Files.getLastModifiedTime(marker)
-    val q1 = mk(spark.readStream.schema(schema).parquet(watch.toString), ckpt)
+    val q1 = start()
     try { feed(0L); q1.processAllAvailable() } finally q1.stop()
 
     // run 2: resume from the checkpoint with a NEW query; only the new
     // chunk may be read (the file-source log already holds chunk 0 —
     // a re-read would duplicate batch ids and pairs)
-    val q2 = mk(spark.readStream.schema(schema).parquet(watch.toString), ckpt)
+    val q2 = start()
     try { feed(1L); q2.processAllAvailable() } finally q2.stop()
 
     val resumed = spark.read.parquet(outDir)

@@ -387,32 +387,6 @@ class SemanticsSpec extends SparkSpec {
       s"streaming dedup counts $streamed != batch counts $batch")
   }
 
-  test("state-store provider invariance: rocksdb replay equals the hdfs replay") {
-    // r16 verdict #4: the RocksDB+changelog provider is the A/B lever
-    // on the stateful family's commit floor — a provider stores state,
-    // it must not change semantics. Pin that: the same stateful dedup
-    // replay under both providers yields identical rows, so the bench
-    // A/B (GRAFT_STREAM_STATE_PROVIDER=rocksdb) compares walls over a
-    // provably unchanged result surface.
-    def counts(): Map[String, Long] =
-      SparkEntry.queries("stream_dedup_stateful")(spark, sf)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val hdfs = counts()
-    System.setProperty("graft.stream.stateProvider", "rocksdb")
-    try {
-      val rocks = counts()
-      assert(rocks == hdfs,
-        s"provider changed the result: rocksdb=$rocks hdfs=$hdfs")
-      // the knob must not leak into the shared session conf (getOption
-      // surfaces the registered HDFS default after unset — assert the
-      // override is gone, not that the conf is absent)
-      assert(!spark.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-        .exists(_.contains("RocksDB")),
-        "providerClass leaked into the session after the scoped replay")
-    } finally System.clearProperty("graft.stream.stateProvider")
-  }
-
   test("stream_ingest_dedup equals the cross-split minhash pairs; index reuse is warm") {
     // batch equivalence: the streamed ingest screen (candidates from
     // the PERSISTED band index, verified at J>=0.5) must equal the
@@ -891,27 +865,38 @@ class SemanticsSpec extends SparkSpec {
       "restricting the ADC scan to IVF cells cannot gain recall")
   }
 
-  test("stream_stateful_count replays identically under the RocksDB state store") {
-    // SURVEY §7.4.5 names RocksDB as the at-scale provider (state >
-    // executor memory); transformWithState already requires it, but the
-    // mapGroupsWithState/dropDuplicates family runs the default
-    // HDFS-backed store. Pin provider-independence: the same replay
-    // under RocksDB yields row-identical results (r9 verdict #5).
-    val default = SparkEntry.queries("stream_stateful_count")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val rocks = SparkEntry.queries("stream_stateful_count")(spark, sf)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+  // SURVEY §7.4.5 names RocksDB as the at-scale provider (state >
+  // executor memory); transformWithState already requires it, but the
+  // mapGroupsWithState/dropDuplicates family runs the session's
+  // provider, the HDFS-backed store by default. A deployment switches
+  // it with Spark's own providerClass conf, which the replay honours.
+  // Pin provider-independence: the same replay under RocksDB yields
+  // row-identical results (r9 verdict #5, r16 verdict #4).
+  Seq("stream_stateful_count", "stream_dedup_stateful").foreach { key =>
+    test(s"$key replays identically under the RocksDB state store") {
+      val providerKey = "spark.sql.streaming.stateStore.providerClass"
+      def rows(): Set[org.apache.spark.sql.Row] =
+        SparkEntry.queries(key)(spark, sf).collect().toSet
+      // the replay scopes its own confs too (8 state partitions, no
+      // no-data batches); none of them may outlive it
+      val replayScoped = Seq("spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled")
+      val before = replayScoped.map(spark.conf.getOption)
+      val default = rows()
+      val rocks = Session.withConfs(spark, providerKey ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+        rows()
+      }
       assert(rocks == default,
         s"RocksDB replay diverged: only-rocks=${(rocks -- default).take(3)} " +
           s"only-default=${(default -- rocks).take(3)}")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+      // the provider must not leak into the shared session conf
+      // (getOption surfaces the registered HDFS default after unset —
+      // assert the override is gone, not that the conf is absent)
+      assert(!spark.conf.getOption(providerKey).exists(_.contains("RocksDB")),
+        "providerClass leaked into the session after the scoped replay")
+      assert(replayScoped.map(spark.conf.getOption) == before,
+        "a replay-scoped conf leaked into the session")
     }
   }
 
